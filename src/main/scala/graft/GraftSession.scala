@@ -5,23 +5,88 @@ import org.apache.spark.sql.SparkSession
 /** Central SparkSession factory.
   *
   * One place for the configs every entry point (Verify, Bench, tests,
-  * apps) must agree on:
+  * apps) must agree on ([[SessionConf]]), and the ONE way code scopes
+  * a conf override ([[scoped]]): nothing else calls `conf.set` on a
+  * caller's session (DriftGuardSpec enforces it).
   *
-  *  - `spark.sql.session.timeZone=UTC` — DuckDB-oracle parity: the
-  *    fixture timestamps are naive (parquet TIMESTAMP without UTC
-  *    adjustment → Spark `timestamp_ntz`), so no wall-clock shifting
-  *    may happen anywhere.
-  *  - `spark.sql.legacy.parquet.nanosAsLong=true` — the `events`
-  *    fixture stores `ts` as parquet TIMESTAMP(NANOS); Spark has no
-  *    nanosecond timestamp type, so we read the raw int64 nanos and
-  *    convert explicitly (see [[Tables.events]]).
-  *  - shuffle partitions sized to the local core count, not the 200
-  *    default (local[N] = one JVM; 200 tiny partitions just adds task
-  *    overhead). On a real cluster this is overridden by AQE
-  *    (`spark.sql.adaptive.coalescePartitions.enabled`), which we
-  *    leave on.
+  * Shuffle partitions are sized to the local core count, not the 200
+  * default (local[N] = one JVM; 200 tiny partitions just adds task
+  * overhead). On a real cluster AQE, which Spark enables by default,
+  * coalesces them.
   */
 object GraftSession {
+
+  /** Session-wide configs. None restates a Spark default
+    * (GraftSessionSpec checks each against a fresh SQLConf).
+    */
+  val SessionConf: Seq[(String, String)] = Seq(
+    // DuckDB-oracle parity: the fixture timestamps are naive (parquet
+    // TIMESTAMP without UTC adjustment → Spark `timestamp_ntz`), so no
+    // wall-clock shifting may happen anywhere. Spark's default is the
+    // JVM's zone, which differs by machine.
+    "spark.sql.session.timeZone" -> "UTC",
+    // The `events` fixture stores `ts` as parquet TIMESTAMP(NANOS);
+    // Spark has no nanosecond timestamp type, so we read the raw int64
+    // nanos and convert explicitly (see [[Tables.events]]).
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // AQE coalesces a shuffle toward max(min(advisory size,
+    // total / parallelism), minPartitionSize), where parallelism is
+    // the cluster's core count. At the DEFAULT 1 MB minPartitionSize
+    // every exchange under cores × 1 MB — at fixture scale ALL of the
+    // derived text/vector exchanges (~0.1–3 MB compressed) — collapses
+    // below the core count, and the CPU-heavy work after it (regexp
+    // tokenize, quadratic verify dots, sketch folds) runs as ONE task
+    // (measured: ta_tfidf's whole tokenize+tf chain and
+    // dd_embed_cosine's 2M-pair verify ran with max_stage_tasks=1).
+    // 64 KB keeps small-but-expensive exchanges spread over the cores
+    // while still coalescing genuinely tiny tails; at cluster scale a
+    // shuffle feeding real work is ≫ cores × 64 KB, so total /
+    // parallelism (or the advisory size) dominates and this floor
+    // never binds — a local-small-data correction, not a local-only
+    // tuning.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
+    // Scan-split sizing for the fixture scale: the default 128 MB
+    // makes every fixture table (even sf1 lineitem at 105 MB) a
+    // SINGLE scan task, serializing the scan+filter stage on one of
+    // N cores. 16 MB splits multi-row-group files (sf1 lineitem =
+    // 6 × 1M-row groups → 6 tasks); single-row-group files are
+    // unsplittable regardless, which is why CPU-heavy text paths
+    // additionally repartition raw rows (TextAnalysis.docs,
+    // TextQueries.wordcount). A real 100 TB deployment keeps the
+    // 128 MB default — there the file count, not this knob,
+    // provides the parallelism.
+    "spark.sql.files.maxPartitionBytes" -> "16m",
+    // The ObjectHashAggregate sort-fallback threshold stays at the
+    // Spark DEFAULT (128 keys in Spark 4) session-wide: a session-
+    // global raise is a memory-pressure risk at scale — count-based,
+    // so a wide-buffer typed aggregate could hold GBs per task before
+    // the sort fallback engaged. The raise is SCOPED to the
+    // similarity-tier trainer/encode/embed paths that measured the
+    // 2.51×/octave sort-fallback regression, via [[typedHash]] child
+    // sessions; every other tier keeps the default's bounded-memory
+    // behavior.
+    //
+    // InferFiltersFromGenerate re-infers isnotnull/size filters on a
+    // generator input every optimizer iteration; alias substitution
+    // expands each copy into the full derived-column expression tree
+    // and pushdown stacks them below the exchanges — measured 114 s
+    // (of a 2 s query) when exploding an md5-derived prefix array at
+    // sf0.1. The inferred filters are a skip-empty-rows optimization
+    // only; dropping the rule is semantics-preserving.
+    "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    // Constraint propagation substitutes derived-column expression
+    // trees (here: md5→shingle pipelines) into the constraint set of
+    // every operator above them; on self-joins with residual
+    // inequality predicates the set explodes and PLANNING dominates
+    // execution 20× (prefix-join candidate stage: 75 s → 4 s
+    // measured at sf0.1 by flipping this flag). The constraints only
+    // buy inferred isnotnull/filter pruning, which the fixture plans
+    // don't need — filters are explicit and keys are non-null.
+    "spark.sql.constraintPropagation.enabled" -> "false",
+    "spark.ui.enabled" -> "false",
+  )
+
   def local(cores: String, shufflePartitions: String,
       extraConf: Map[String, String] = Map.empty): SparkSession = {
     val builder = SparkSession
@@ -29,90 +94,12 @@ object GraftSession {
       .master(s"local[$cores]")
       .appName("graft")
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Never coalesce below the cluster's parallelism (round 13):
-      // AQE's target-size math coalesces a small COMPRESSED shuffle
-      // (~1 MB of band keys, piece ids, …) to ONE partition, and any
-      // downstream blowup — a band join's candidate multiset, a
-      // window sort over the re-exploded stream — then runs on one
-      // core. The floor is the CORE COUNT (the same number a real
-      // cluster sets here, scaling with the deployment, not with the
-      // data or this box): partitions stay ≥ parallelism while AQE
-      // still coalesces the long tail of genuinely tiny exchanges
-      // down to it.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        cores)
-      // …and make the floor actually bind (round 14): Spark computes
-      // the coalescing target as max(min(advisory, total/minNum),
-      // minPartitionSize), so the DEFAULT 1 MB minPartitionSize
-      // overrides minPartitionNum for every exchange under
-      // cores × 1 MB — which at fixture scale is ALL of the derived
-      // text/vector exchanges (~0.1–3 MB compressed), collapsing the
-      // CPU-heavy work after them (regexp tokenize, quadratic verify
-      // dots, sketch folds) to ONE task (measured: ta_tfidf's whole
-      // tokenize+tf chain and dd_embed_cosine's 2M-pair verify ran
-      // single-task with max_stage_tasks=1). 64 KB keeps the floor
-      // meaningful for small-but-expensive exchanges while still
-      // coalescing genuinely tiny tails; at cluster scale a shuffle
-      // feeding real work is ≫ cores × 64 KB, so total/minNum (or the
-      // advisory size) dominates and this floor never binds — it is a
-      // local-small-data correction, not a local-only tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "64k")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Scan-split sizing for the fixture scale: the default 128 MB
-      // makes every fixture table (even sf1 lineitem at 105 MB) a
-      // SINGLE scan task, serializing the scan+filter stage on one of
-      // N cores. 16 MB splits multi-row-group files (sf1 lineitem =
-      // 6 × 1M-row groups → 6 tasks); single-row-group files are
-      // unsplittable regardless, which is why CPU-heavy text paths
-      // additionally repartition raw rows (TextAnalysis.docs,
-      // TextQueries.wordcount). A real 100 TB deployment keeps the
-      // 128 MB default — there the file count, not this knob,
-      // provides the parallelism.
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      // Runtime bloom-filter pruning: a selective join side plants a
-      // bloom filter on the big side's scan — at 100 TB this prunes
-      // most of a fact-table read when the dim filter is selective.
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      // The ObjectHashAggregate sort-fallback threshold stays at the
-      // Spark DEFAULT (128 keys in Spark 4) session-wide (round 14, VERDICT
-      // r13 item 2): the round-13 session-global 4M-key raise was a
-      // memory-pressure risk at scale — count-based, so a wide-
-      // buffer typed aggregate could hold GBs per task before the
-      // sort fallback engaged. The raise is now SCOPED to the
-      // similarity-tier trainer/encode/embed paths that measured the
-      // 2.51×/octave sort-fallback regression, via [[typedHash]]
-      // child sessions (the Stateful.scoped discipline); every other
-      // tier keeps the default's bounded-memory behavior.
-      // InferFiltersFromGenerate re-infers isnotnull/size filters on a
-      // generator input every optimizer iteration; alias substitution
-      // expands each copy into the full derived-column expression tree
-      // and pushdown stacks them below the exchanges — measured 114 s
-      // (of a 2 s query) when exploding an md5-derived prefix array at
-      // sf0.1. The inferred filters are a skip-empty-rows optimization
-      // only; dropping the rule is semantics-preserving.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // Constraint propagation substitutes derived-column expression
-      // trees (here: md5→shingle pipelines) into the constraint set of
-      // every operator above them; on self-joins with residual
-      // inequality predicates the set explodes and PLANNING dominates
-      // execution 20× (prefix-join candidate stage: 75 s → 4 s
-      // measured at sf0.1 by flipping this flag). The constraints only
-      // buy inferred isnotnull/filter pruning, which the fixture plans
-      // don't need — filters are explicit and keys are non-null.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.ui.enabled", "false")
     // Pre-context overrides (e.g. SpillProof's constrained
     // spark.memory.fraction) — only effective for the JVM's FIRST
     // session, since local-mode executor memory is fixed at context
     // creation; later callers get the existing context regardless.
-    val spark = extraConf.foldLeft(builder) {
+    val spark = (SessionConf ++ extraConf).foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -125,97 +112,102 @@ object GraftSession {
     local(cpus, cpus)
   }
 
-  /** Child session with an ISOLATED SQLConf (VERDICT r6 item 6):
-    * shares the SparkContext, block manager and catalog, but owns its
-    * conf, so a scoped helper (streaming lifecycle runs that pin a
-    * small state-partition count) can override settings without
-    * mutating — or having to restore — the caller's session, and
-    * without racing concurrent queries on it.
+  /** parent → (effective conf → child). Weak keys: a dropped parent
+    * takes its children with it (a child holds no reference to its
+    * parent).
+    */
+  private val children = new java.util.WeakHashMap[SparkSession,
+    scala.collection.mutable.Map[Map[String, String], SparkSession]]
+
+  /** Child session with an ISOLATED SQLConf: shares the SparkContext,
+    * block manager and catalog, but owns its conf, so a scoped helper
+    * (fixpoint loops, streaming lifecycles, typed-hash builds) can
+    * override settings without mutating — or having to restore — the
+    * caller's session, and without racing concurrent queries on it.
     *
     * `newSession()` alone starts from the CONTEXT defaults, which
     * would silently drop any runtime conf the parent has changed
     * since startup; the parent's runtime conf is therefore copied
     * first (static/non-modifiable entries skipped — they are
     * context-global and already shared), then the overrides applied.
+    *
+    * Memoized per parent, keyed by the child's effective conf (the
+    * parent's runtime conf plus `overrides`): a repeated scope reuses
+    * its child — a fresh session costs tens of ms per call — and a
+    * parent whose conf has changed since gets a new child, never a
+    * stale one. Plan nodes capture their session at planning time, so
+    * frames built on the child execute under its conf while the
+    * parent (and every consumer rebound onto it) keeps its own.
     */
-  /** Streaming lifecycle shuffle/state partition sizing (round 14,
-    * VERDICT r13 item 7): the stateful gates and store-build waves
-    * run their micro-batches on child sessions pinned to a SMALL
-    * partition count sized to the data (state-key cardinality for
-    * the stateful gates, wave volume for the ingest stores), not the
-    * core count. The counts are now a single documented conf each —
-    * `spark.graft.streaming.statePartitions` (default 4) and
-    * `spark.graft.streaming.wavePartitions` (default 8) — set on the
-    * parent session (or spark-defaults) by a deployment whose state
-    * or wave volume outgrows the defaults. Partition count never
-    * affects emitted rows (spec-pinned invariance).
-    */
-  def streamPartitions(s: SparkSession, key: String,
-      default: Int): String =
-    s.conf.getOption(key).flatMap(_.toIntOption).filter(_ > 0)
-      .getOrElse(default).toString
+  def scoped(s: SparkSession, overrides: Map[String, String]): SparkSession = {
+    val parentConf = s.conf.getAll
+    children.synchronized {
+      children.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
+        .getOrElseUpdate(parentConf ++ overrides, {
+          val ss = s.newSession()
+          parentConf.foreach { case (k, v) =>
+            try if (ss.conf.isModifiable(k)) ss.conf.set(k, v)
+            catch { case _: Exception => () }
+          }
+          overrides.foreach { case (k, v) => ss.conf.set(k, v) }
+          ss
+        })
+    }
+  }
 
   val StatePartitionsKey = "spark.graft.streaming.statePartitions"
   val WavePartitionsKey = "spark.graft.streaming.wavePartitions"
 
+  /** Streaming lifecycle shuffle/state partition sizing: the stateful
+    * gates and store-build waves run their micro-batches on child
+    * sessions pinned to a SMALL partition count sized to the data
+    * (state-key cardinality for the stateful gates, wave volume for
+    * the ingest stores), not the core count. The counts are a single
+    * documented conf each — `spark.graft.streaming.statePartitions`
+    * (default 4) and `spark.graft.streaming.wavePartitions` (default
+    * 8) — set on the parent session (or spark-defaults) by a
+    * deployment whose state or wave volume outgrows the defaults.
+    * Partition count never affects emitted rows (spec-pinned
+    * invariance). Each returns the override for [[scoped]].
+    */
+  def statePartitions(s: SparkSession): Map[String, String] =
+    streamPartitions(s, StatePartitionsKey, 4)
+
+  def wavePartitions(s: SparkSession): Map[String, String] =
+    streamPartitions(s, WavePartitionsKey, 8)
+
+  private def streamPartitions(s: SparkSession, key: String,
+      default: Int): Map[String, String] =
+    Map("spark.sql.shuffle.partitions" ->
+      s.conf.getOption(key).flatMap(_.toIntOption).filter(_ > 0)
+        .getOrElse(default).toString)
+
   /** ObjectHashAggregate key threshold for the similarity-tier
-    * trainer/encode/embed aggregations (round 14 — scoping the
-    * round-13 session-global raise, VERDICT r13 item 2). The
-    * vec_id-keyed typed aggregates (ArgPickAgg argmax/argmin,
-    * VecScatterSumAgg) MUST stay hash passes at octave scale
-    * (128× ≈ 440k keys/task, 640× ≈ 2M — the sort fallback was the
-    * 2.51×/octave ss_rag_index cold crossing), and their in-memory
-    * map is byte-bounded in practice: ArgPickAgg buffers are ~24 B/
-    * key (4M keys ≈ 100 MB worst case), and the Dim-long
-    * VecScatterSumAgg (~520 B/key) is keyed by chunk with keys/task
-    * bounded by scan/shuffle partition sizing (measured 640× regime:
-    * ~210k keys/task ≈ 110 MB) — the count threshold is a backstop
-    * there, not the working bound. The wide-buffer VecSumAgg updates
-    * are keyed by centroid/codebook cell (bounded cardinality ≪
-    * 4096) and never reach any threshold. Everything outside these
-    * paths — collect_list tiers, multimodal, text — keeps Spark's
-    * default 4096-key fallback.
+    * trainer/encode/embed aggregations. The vec_id-keyed typed
+    * aggregates (ArgPickAgg argmax/argmin, VecScatterSumAgg) MUST stay
+    * hash passes at octave scale (128× ≈ 440k keys/task, 640× ≈ 2M —
+    * the sort fallback was the 2.51×/octave ss_rag_index cold
+    * crossing), and their in-memory map is byte-bounded in practice:
+    * ArgPickAgg buffers are ~24 B/key (4M keys ≈ 100 MB worst case),
+    * and the Dim-long VecScatterSumAgg (~520 B/key) is keyed by chunk
+    * with keys/task bounded by scan/shuffle partition sizing (measured
+    * 640× regime: ~210k keys/task ≈ 110 MB) — the count threshold is a
+    * backstop there, not the working bound. The wide-buffer VecSumAgg
+    * updates are keyed by centroid/codebook cell (bounded cardinality)
+    * and never reach any threshold. Everything outside these paths —
+    * collect_list tiers, multimodal, text — keeps Spark's default
+    * 128-key fallback.
     */
   val TypedHashKeys: Int = 4 * 1024 * 1024
 
-  private val typedHashMemo =
-    scala.collection.mutable.Map.empty[SparkSession, SparkSession]
-
-  /** The per-root cached child session the similarity-tier trainer/
-    * encode/embed frames are BUILT on: plan nodes capture their
-    * session at planning time, so the eager per-round checkpoints and
-    * the Lineage-persisted frames compiled from this session execute
-    * their ObjectHashAggregates under the raised threshold while the
-    * parent session (and every consumer of the materialized frames)
-    * keeps the default.
+  /** The child session the similarity-tier trainer/encode/embed frames
+    * are BUILT on: the eager per-round checkpoints and the
+    * Lineage-persisted frames compiled from this session execute their
+    * ObjectHashAggregates under the raised threshold while the parent
+    * session (and every consumer of the materialized frames) keeps the
+    * default.
     */
   def typedHash(s: SparkSession): SparkSession =
-    typedHashMemo.synchronized {
-      typedHashMemo.getOrElseUpdate(s,
-        child(s, Map(
-          "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
-            TypedHashKeys.toString)))
-    }
-
-  /** Child session pinned to the state-keyed partition count. */
-  def stateScoped(s: SparkSession,
-      extra: Map[String, String] = Map.empty): SparkSession =
-    child(s, Map("spark.sql.shuffle.partitions" ->
-      streamPartitions(s, StatePartitionsKey, 4)) ++ extra)
-
-  /** Child session pinned to the wave-sized partition count. */
-  def waveScoped(s: SparkSession,
-      extra: Map[String, String] = Map.empty): SparkSession =
-    child(s, Map("spark.sql.shuffle.partitions" ->
-      streamPartitions(s, WavePartitionsKey, 8)) ++ extra)
-
-  def child(s: SparkSession, overrides: Map[String, String]): SparkSession = {
-    val ss = s.newSession()
-    s.conf.getAll.foreach { case (k, v) =>
-      try if (ss.conf.isModifiable(k)) ss.conf.set(k, v)
-      catch { case _: Exception => () }
-    }
-    overrides.foreach { case (k, v) => ss.conf.set(k, v) }
-    ss
-  }
+    scoped(s, Map("spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
+      TypedHashKeys.toString))
 }

@@ -882,7 +882,7 @@ object Dedup {
     // minutes multiplying 2^26-bit BigIntegers (measured at the 32×
     // fixture; see ColumnBridge.statsBarrier + StatsBarrierSpec).
     import org.apache.spark.sql.graft.ColumnBridge.statsBarrier
-    var labels = statsBarrier(edges.groupBy(col("u").as("node"))
+    val seeded = statsBarrier(edges.groupBy(col("u").as("node"))
       .agg(min(col("v")).as("nmin"))
       .select(col("node"), least(col("node"), col("nmin")).as("c"))
       .localCheckpoint())
@@ -892,7 +892,7 @@ object Dedup {
     // r5 constant cap of 25 was exceeded by a 72k-node kNN graph at
     // the 32× fixture), so the bound must scale with the node count,
     // not sit at a constant that a bigger corpus walks past.
-    val seed = labels.agg(count(lit(1)), sum(col("c"))).first()
+    val seed = seeded.agg(count(lit(1)), sum(col("c"))).first()
     val nNodes = seed.getLong(0)
     def labelSum(df: DataFrame): Long =
       df.agg(sum(col("c"))).first().getLong(0)
@@ -908,9 +908,13 @@ object Dedup {
     // 22 rounds × ~0.8 s over a 128k-row label frame on 32
     // partitions). See [[graft.operators.Fixpoint]]; label values
     // are unaffected.
-    graft.operators.Fixpoint.withScopedShuffle(pairs.sparkSession, nNodes) {
+    val fixed =
+      graft.operators.Fixpoint.scoped(pairs.sparkSession, nNodes) { cs =>
+    import org.apache.spark.sql.graft.ColumnBridge.onSession
+    val edgesC = onSession(cs, edges)
+    var labels = onSession(cs, seeded)
     while (!converged && rounds < MaxRounds) {
-      val prop = edges
+      val prop = edgesC
         .join(labels.withColumnRenamed("node", "u").withColumnRenamed("c", "cu"), "u")
         .select(col("v").as("node"), col("cu").as("c"))
       val jump = labels.as("a")
@@ -927,6 +931,7 @@ object Dedup {
       if (sys.env.contains("SPARK_GRAFT_CC_TRACE")) System.err.println(
         s"[cc] round $rounds/$MaxRounds sum=$nextSum converged=$converged")
     }
+    onSession(pairs.sparkSession, labels)
     }
     // Pointer jumping makes the cap unreachable below diameter ~2^25;
     // if it IS hit, the labels are not a fixpoint and silently
@@ -935,7 +940,7 @@ object Dedup {
       s"connectedComponents: min-label propagation did not converge in " +
         s"$MaxRounds rounds — graph diameter exceeds the pointer-" +
         s"jumping bound; raise MaxRounds")
-    labels
+    fixed
   }
 
   // -----------------------------------------------------------------

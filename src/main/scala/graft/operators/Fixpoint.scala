@@ -2,96 +2,55 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** SHUFFLE-PARTITION SCOPE for iterative fixpoint loops (round 6).
+/** SHUFFLE-PARTITION SCOPE for iterative fixpoint loops.
   *
   * Every driver-coordinated fixpoint in the engine (CC min-label,
   * PageRank power iteration, BFS relaxation, ancestor doubling, BPE
-  * pair-merge) runs a handful of shuffles per round over frames whose
-  * row count is known up front. At the session's full partition count
-  * those rounds are pure scheduler/exchange LATENCY on near-empty
-  * partitions — traced on the CC loop at the 64× fixture: 22 rounds ×
-  * ~0.8 s over a 128k-row label frame on 32 partitions, dropping to
-  * ~0.5 s/round at 8. This helper scopes
-  * `spark.sql.shuffle.partitions` to ~[[RowsPerPartition]] rows per
-  * partition (floor 8, capped at the session setting) for the
-  * duration of the loop and restores it after.
-  *
-  * CONCURRENCY (VERDICT r6 item 6 + ADVICE): the knob is session-
-  * global, so a naive set/restore pair is wrong when two scoped loops
-  * overlap on one session — the second entrant would read the first's
-  * scoped value as its "previous" and restore THAT, leaking the scope
-  * forever. The scope is therefore reference-counted per session:
-  * the first entrant records the true original, every entrant lowers
-  * the setting to the smallest live request (any small value is
-  * equally correct — partition count never affects row values, only
-  * latency), and only the LAST exit restores the original. Gated by
-  * FixpointConcurrencySpec (two concurrent loops, correct results,
-  * conf restored). A non-numeric session value (e.g. a future "auto")
-  * degrades to a no-op scope rather than throwing.
+  * pair-merge, unigram EM) runs a handful of shuffles per round over
+  * frames whose row count is known up front. At the session's full
+  * partition count those rounds are pure scheduler/exchange LATENCY
+  * on near-empty partitions — traced on the CC loop at the 64×
+  * fixture: 22 rounds × ~0.8 s over a 128k-row label frame on 32
+  * partitions, dropping to ~0.5 s/round at 8. [[scoped]] runs the
+  * loop on a child session ([[graft.GraftSession.scoped]]) with
+  * `spark.sql.shuffle.partitions` at ~[[RowsPerPartition]] rows per
+  * partition (floor 8, capped at the caller's setting) and AQE off.
+  * The caller's session is never touched, so concurrent loops and
+  * queries on it need no coordination, and a nested scope (whose
+  * caller is the outer child) can only keep or lower the outer count.
   *
   * At production scale the cap keeps every partition (rows/250k ≥
   * the session setting), so this is a fixture/latency regime
-  * optimization that degrades to a no-op exactly when the data is
-  * big enough to need full parallelism. Wrap the WHOLE build —
-  * including any pre-loop `repartition(key)` of a reused edge frame —
-  * so the per-round joins co-partition with the loop and the
-  * pinned exchange is actually reused.
+  * optimization that degrades to the caller's count exactly when the
+  * data is big enough to need full parallelism.
+  *
+  * The body rebinds its loop inputs onto the child it is handed and
+  * the frames that leave the loop back onto the caller
+  * (`ColumnBridge.onSession`), so post-loop work plans under the
+  * caller's conf. Build the WHOLE loop on the child — including any
+  * pre-loop `repartition(key)` of a reused edge frame — so the
+  * per-round joins co-partition with the loop and the pinned exchange
+  * is actually reused.
   */
 object Fixpoint {
 
   val RowsPerPartition = 250000L
 
   private val Key = "spark.sql.shuffle.partitions"
-  private val AqeKey = "spark.sql.adaptive.enabled"
 
-  /** session → (original partitions, original AQE, live scope depth). */
-  private val scopes =
-    scala.collection.mutable.Map.empty[SparkSession, (String, String, Int)]
-
-  /** Scope `spark.sql.shuffle.partitions` down to the loop's row
-    * count AND disable AQE for the loop's duration (round 12 — the
-    * cold-build latency attack): a scoped fixpoint round runs 3–5
-    * tiny shuffles whose partition count is already pinned here, so
-    * AQE's per-shuffle stage materialization + re-optimization is
-    * pure added latency — measured 12.4 → 10.9 s on the 20-round BPE
-    * merge loop cold at sf0.1 (~0.08 s/round), with zero plan benefit
-    * forgone (loop bodies broadcast by explicit hint, and
-    * coalesce/skew handling is moot at 8 partitions). Restored by the
-    * LAST exit, same refcount discipline as the partition scope.
+  /** Run `body` on a child of `s` scoped to a loop over `nRows` rows.
+    * AQE is off on the child: a scoped fixpoint round runs 3–5 tiny
+    * shuffles whose partition count is already pinned here, so AQE's
+    * per-shuffle stage materialization + re-optimization is pure added
+    * latency — measured 12.4 → 10.9 s on the 20-round BPE merge loop
+    * cold at sf0.1 (~0.08 s/round), with zero plan benefit forgone
+    * (loop bodies broadcast by explicit hint, and coalesce/skew
+    * handling is moot at 8 partitions).
     */
-  def withScopedShuffle[T](s: SparkSession, nRows: Long)(body: => T): T =
-    // ADVICE r12: the knob pair is session-global, and round 12 also
-    // introduced concurrent builds on the same session
-    // (Lineage.parallel). A small scoped loop overlapping such a
-    // build would strip AQE and shrink shuffle partitions under the
-    // heavier trainer's shuffles — so while a parallel build is in
-    // flight the scope degrades to a no-op (perf-only either way:
-    // partition count never affects row values, and no current
-    // parallel-built chain calls a scoped loop internally).
-    if (Lineage.parallelBuildsActive(s)) body
-    else s.conf.get(Key).toLongOption match {
-      case None => body // non-numeric session value: no-op scope
-      case Some(sessionParts) =>
-        val want = math.max(8L,
-          math.min(sessionParts, nRows / RowsPerPartition))
-        scopes.synchronized {
-          val (orig, aqe, depth) = scopes.getOrElse(s,
-            (s.conf.get(Key), s.conf.get(AqeKey, "true"), 0))
-          scopes(s) = (orig, aqe, depth + 1)
-          // Lower to the smallest live request; never raise a value a
-          // concurrent scope already pinned lower.
-          val cur = s.conf.get(Key).toLongOption.getOrElse(want)
-          s.conf.set(Key, math.min(cur, want).toString)
-          s.conf.set(AqeKey, "false")
-        }
-        try body
-        finally scopes.synchronized {
-          scopes(s) match {
-            case (orig, aqe, 1) =>
-              s.conf.set(Key, orig); s.conf.set(AqeKey, aqe)
-              scopes.remove(s)
-            case (orig, aqe, d) => scopes(s) = (orig, aqe, d - 1)
-          }
-        }
-    }
+  def scoped[T](s: SparkSession, nRows: Long)(body: SparkSession => T): T = {
+    val parts = math.min(s.conf.get(Key).toLong,
+      math.max(8L, nRows / RowsPerPartition))
+    body(graft.GraftSession.scoped(s, Map(
+      Key -> parts.toString, "spark.sql.adaptive.enabled" -> "false")))
+  }
 }

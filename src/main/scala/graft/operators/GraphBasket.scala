@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.onSession
 
 import graft.Tables
 
@@ -174,14 +175,15 @@ object GraphBasket {
     // Whole build scoped to the edge count (see operators.Fixpoint):
     // the pre-loop repartition(u) then pins the SAME partition count
     // the per-round joins require, so the edge exchange stays reused.
-    Fixpoint.withScopedShuffle(s, ed.count()) {
+    val ranks = Fixpoint.scoped(s, ed.count()) { cs =>
+    val edc = onSession(cs, ed)
     // deg and edges are checkpointed so the per-round eager actions
     // below never re-derive the co-purchase graph from raw data
-    val deg = ed.groupBy("u").agg(count(lit(1)).as("d")).localCheckpoint()
+    val deg = edc.groupBy("u").agg(count(lit(1)).as("d")).localCheckpoint()
     // hash-partition the edge list on the per-round join key ONCE;
     // localCheckpoint preserves the partitioning, so every round's
     // join exchanges only the (small) rank frame, not the edges
-    val edges = ed.join(deg, "u")
+    val edges = edc.join(deg, "u")
       .repartition(col("u")).localCheckpoint()
     val n = broadcast(deg.agg(count(lit(1)).as("nv")))
     var r = deg.crossJoin(n)
@@ -201,10 +203,11 @@ object GraphBasket {
               .as("r"))
           .localCheckpoint())
     }
-    r.select(col("v").as("part"), col("r").as("rank_scaled"),
+    onSession(s, r)
+    }
+    ranks.select(col("v").as("part"), col("r").as("rank_scaled"),
         (col("r").cast("double") / lit(PrScale).cast("double")).as("pr"))
       .orderBy(desc("rank_scaled"), asc("part"))
-    }
   }
 
   /** Rank quantum: 1e-12 of total mass. */
@@ -240,8 +243,8 @@ object GraphBasket {
       .unionByName(e0.select(col("pb").as("u"), col("pa").as("w")))
       .localCheckpoint()
     // Scoped like q52PageRank — see operators.Fixpoint.
-    Fixpoint.withScopedShuffle(s, ed.count()) {
-    val edges = ed
+    val dists = Fixpoint.scoped(s, ed.count()) { cs =>
+    val edges = onSession(cs, ed)
       .repartition(col("u")).localCheckpoint() // see q52PageRank
     val src = broadcast(edges.agg(min("u").as("sv")))
     var dist = edges.crossJoin(src)
@@ -257,9 +260,10 @@ object GraphBasket {
         .groupBy("v").agg(min("d").as("d"))
         .localCheckpoint())
     }
-    dist.select(col("v").as("part"), col("d").as("dist"))
-      .orderBy("dist", "part")
+    onSession(s, dist)
     }
+    dists.select(col("v").as("part"), col("d").as("dist"))
+      .orderBy("dist", "part")
   }
 
   /** Hop bound for the BFS — mirrored by the unrolled oracle. */

@@ -58,7 +58,7 @@ object Hierarchy {
       nodes.select(col("k").as("par"), lit(1).as("pex")), Seq("par"), "left")
     // A_0: roots anchor at themselves with distance 0; everyone else
     // at their parent with distance 1.
-    var anc = withEx.select(col("node"),
+    val seeded = withEx.select(col("node"),
         when(col("par").isNull || col("pex").isNull, col("node"))
           .otherwise(col("par")).as("anc"),
         when(col("par").isNull || col("pex").isNull, lit(0L))
@@ -70,14 +70,16 @@ object Hierarchy {
       val v = df.agg(sum(col("d"))).first()
       if (v.isNullAt(0)) 0L else v.getLong(0)
     }
-    val seed = anc.agg(count(lit(1)), sum(col("d"))).first()
+    val seed = seeded.agg(count(lit(1)), sum(col("d"))).first()
     val nNodes = seed.getLong(0)
     var prevSum = if (seed.isNullAt(1)) 0L else seed.getLong(1)
     var converged = false
     var rounds = 0
     val MaxRounds = 40
     // Doubling rounds scoped to the node count — see operators.Fixpoint.
-    Fixpoint.withScopedShuffle(nodes.sparkSession, nNodes) {
+    val ancestors = Fixpoint.scoped(nodes.sparkSession, nNodes) { cs =>
+    import org.apache.spark.sql.graft.ColumnBridge.onSession
+    var anc = onSession(cs, seeded)
     while (!converged && rounds < MaxRounds) {
       // statsBarrier: ancestor doubling self-joins anc with itself, so
       // checkpoint-preserved stats square per round (see
@@ -95,12 +97,13 @@ object Hierarchy {
       anc = next
       rounds += 1
     }
+    onSession(nodes.sparkSession, anc)
     }
     if (!converged) throw new IllegalStateException(
       s"hierarchy: ancestor doubling did not converge in $MaxRounds " +
         "rounds — tree depth exceeds 2^MaxRounds or the parent " +
         "derivation produced a cycle")
-    anc.select(col("node"), col("d").as("depth"))
+    ancestors.select(col("node"), col("d").as("depth"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

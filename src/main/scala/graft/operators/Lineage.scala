@@ -58,21 +58,6 @@ object Lineage {
         .toMap
     }
 
-  /** Sessions with a [[parallel]] build currently in flight — read by
-    * [[Fixpoint.withScopedShuffle]] (ADVICE r12): the scoped loop's
-    * AQE-off + partition-shrink is session-global, so a small scoped
-    * loop overlapping a concurrent heavy build would strip AQE and
-    * shrink shuffle partitions under the build's shuffles. While a
-    * parallel build is live the scope degrades to a no-op (perf-only
-    * either way — partition count never affects row values).
-    */
-  private val parallelLive =
-    scala.collection.mutable.Map.empty[SparkSession, Int]
-
-  /** True while a [[parallel]] build is in flight on `s`. */
-  def parallelBuildsActive(s: SparkSession): Boolean =
-    parallelLive.synchronized { parallelLive.getOrElse(s, 0) > 0 }
-
   /** Build several INDEPENDENT keys concurrently (round 12 — the
     * cold-build cost attack): each missing key's build runs on its
     * own thread OUTSIDE the global lock (a build is internally a
@@ -113,9 +98,6 @@ object Lineage {
         val pool = java.util.concurrent.Executors
           .newFixedThreadPool(missing.size)
         val ec = ExecutionContext.fromExecutorService(pool)
-        parallelLive.synchronized {
-          parallelLive(s) = parallelLive.getOrElse(s, 0) + 1
-        }
         val settled: Seq[(String, Try[DataFrame])] =
           try Await.result(
             Future.sequence(missing.map { case (k, b) =>
@@ -123,13 +105,7 @@ object Lineage {
                 k -> Try(timed((s, dir, k))(b().persist(level)))
               }(ec)
             })(implicitly, ec), Duration.Inf)
-          finally {
-            ec.shutdown()
-            parallelLive.synchronized {
-              val d = parallelLive.getOrElse(s, 1) - 1
-              if (d <= 0) parallelLive.remove(s) else parallelLive(s) = d
-            }
-          }
+          finally ec.shutdown()
         cache.synchronized {
           settled.foreach {
             case (k, Success(df)) =>

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * hot key on one partition mutex, `src/mapreduce.c:289`; at 100 TB a
   * hot key serializes a whole reducer the same way).
   *
-  * First line of defense is AQE (`skewJoin.enabled`, on in
-  * GraftSession). This module is the explicit recipe for the case AQE
+  * First line of defense is AQE (`skewJoin.enabled`, on by Spark's
+  * default). This module is the explicit recipe for the case AQE
   * cannot fix: an *aggregation* whose group key is so hot that one
   * partition's partial buffer dominates (AQE splits skewed JOIN
   * partitions, not aggregation groups).

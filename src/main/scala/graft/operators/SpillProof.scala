@@ -36,8 +36,8 @@ object SpillProof {
     val spark = GraftSession.local("4", "8", Map(
       "spark.memory.fraction" -> "0.05",
       "spark.memory.storageFraction" -> "0.1",
-      // Round 14: the AQE coalescing floor (minPartitionNum = cores,
-      // made binding by the 64 KB minPartitionSize) means the gated
+      // Round 14: AQE's coalescing floor (the core count, made
+      // binding by the 64 KB minPartitionSize) means the gated
       // stages now run on all 4 task slots instead of one coalesced
       // partition — a MORE honest starved regime (4 tasks share the
       // ~11 MB pool, per-task cap ≈ pool/slots ≈ 2.7 MB). Under that

@@ -360,11 +360,12 @@ object DedupIngest {
     val path = gatePath(s0, dir)
     graft.operators.Lineage.ensure(s0, dir, "dd_stream_store") {
       // Store build on a child session with wave-sized shuffle
-      // partitions (round 13, the PipeIngest.scoped rationale): the
-      // micro-batch joins/aggregations otherwise fan 32 ways for a
-      // few-hundred-document wave. Partition count never affects the
-      // discovered pair set (spec-pinned invariance).
-      val s = graft.GraftSession.waveScoped(s0)
+      // partitions (round 13, the PipeIngest.pipeStreamIngest
+      // rationale): the micro-batch joins/aggregations otherwise fan
+      // 32 ways for a few-hundred-document wave. Partition count never
+      // affects the discovered pair set (spec-pinned invariance).
+      val s = graft.GraftSession.scoped(s0,
+        graft.GraftSession.wavePartitions(s0))
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(root, true) // a crashed previous run's leftovers

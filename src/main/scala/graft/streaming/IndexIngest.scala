@@ -135,9 +135,10 @@ object IndexIngest {
     val path = gatePath(s0, dir)
     graft.operators.Lineage.ensure(s0, dir, "ss_ingest_store") {
       // Store build on a child session with wave-sized shuffle
-      // partitions (round 13, the PipeIngest.scoped rationale);
-      // results are partition-count invariant.
-      val s = graft.GraftSession.waveScoped(s0)
+      // partitions (round 13, the PipeIngest.pipeStreamIngest
+      // rationale); results are partition-count invariant.
+      val s = graft.GraftSession.scoped(s0,
+        graft.GraftSession.wavePartitions(s0))
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(root, true)

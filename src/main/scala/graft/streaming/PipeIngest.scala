@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.GraftSession
 import graft.dedup.Dedup
 import graft.pipeline.CorpusPipeline
 import graft.sources.Formats
@@ -632,24 +633,19 @@ object PipeIngest {
       s"_${ProcessHandle.current().pid()}_${System.identityHashCode(s)}"
   }
 
-  /** Child session for a store-build lifecycle (round 13): the
-    * micro-batch waves and artifact training ran on the caller's 32
-    * shuffle partitions, so every tiny per-wave stage paid 32 task
-    * launches and the state/sink writers fanned 32 ways for a
-    * few-hundred-document batch. 8 partitions is sized to the WAVE
-    * volume (a micro-batch's shuffle should be a handful of
-    * real-sized partitions — the Resume/RateIngest discipline), not
-    * to the local core count: a production deployment picks this from
-    * its batch size the same way; results are partition-count
-    * invariant (spec-pinned).
-    */
-  private def scoped(s: SparkSession): SparkSession =
-    graft.GraftSession.waveScoped(s)
-
   def pipeStreamIngest(s0: SparkSession, dir: String): DataFrame = {
     val path = gatePath(s0, dir, "pipe_ingest")
     graft.operators.Lineage.ensure(s0, dir, "pipe_stream_store") {
-      val s = scoped(s0)
+      // Store build on a child session sized to the WAVE volume: the
+      // micro-batch waves and artifact training ran on the caller's 32
+      // shuffle partitions, so every tiny per-wave stage paid 32 task
+      // launches and the state/sink writers fanned 32 ways for a
+      // few-hundred-document batch. A micro-batch's shuffle should be
+      // a handful of real-sized partitions (the Resume/RateIngest
+      // discipline), not the core count; a production deployment
+      // picks this from its batch size the same way. Results are
+      // partition-count invariant (spec-pinned).
+      val s = GraftSession.scoped(s0, GraftSession.wavePartitions(s0))
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(root, true)
@@ -696,7 +692,8 @@ object PipeIngest {
   def pipeCompact(s0: SparkSession, dir: String): DataFrame = {
     val path = gatePath(s0, dir, "pipe_compact")
     graft.operators.Lineage.ensure(s0, dir, "pipe_compact_store") {
-      val s = scoped(s0)
+      // Wave-sized child session, as in pipeStreamIngest.
+      val s = GraftSession.scoped(s0, GraftSession.wavePartitions(s0))
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(root, true)
@@ -748,7 +745,8 @@ object PipeIngest {
   private def fullStore(s0: SparkSession, dir: String): String = {
     val path = gatePath(s0, dir, "pipe_full")
     graft.operators.Lineage.ensure(s0, dir, "pipe_stream_full_store") {
-      val s = scoped(s0)
+      // Wave-sized child session, as in pipeStreamIngest.
+      val s = GraftSession.scoped(s0, GraftSession.wavePartitions(s0))
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(root, true)

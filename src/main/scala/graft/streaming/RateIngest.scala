@@ -81,7 +81,8 @@ object RateIngest {
     // no restore to race. Temp view + frames live on the child, which
     // shares the context/block manager, so the returned frame is
     // usable anywhere.
-    val s = graft.GraftSession.stateScoped(s0)
+    val s = graft.GraftSession.scoped(s0,
+      graft.GraftSession.statePartitions(s0))
     // First window_start past the kept range, in the sink's string
     // encoding (UTC session; start epoch 0): lexicographic compare on
     // the formatted strings is chronological compare.

@@ -157,7 +157,8 @@ object Resume {
 
     val waveSchema = s.read.parquet(src.toString).schema
 
-    val sc = graft.GraftSession.stateScoped(s)
+    val sc = graft.GraftSession.scoped(s,
+      graft.GraftSession.statePartitions(s))
     def runOnce(): Unit = {
       val agg = sc.readStream.schema(waveSchema).parquet(src.toString)
         .withColumn("ts_wm", timestamp_micros(expr("ts_ns DIV 1000")))

@@ -97,19 +97,21 @@ private[graft] object BpeCore {
     */
   def mergeLoop(s: SparkSession, pieces0: DataFrame,
       nMerges: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.graft.ColumnBridge.statsBarrier
+    import org.apache.spark.sql.graft.ColumnBridge.{onSession, statsBarrier}
 
     // Loop invariant (round 14 — one window pass per round): `pieces`
     // carries the lookahead column, attached once here for the seed
     // and re-emitted by [[applyMerge]]'s own window pass for every
     // later round, so the per-round best-pair job below never sorts.
     val wOrd = Window.partitionBy("word").orderBy("pos")
-    var pieces = pieces0
+    val seeded = pieces0
       .withColumn("nxt", lead(col("sym"), 1).over(wOrd))
       .localCheckpoint()
-    val bests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-    graft.operators.Fixpoint.withScopedShuffle(s, pieces.count()) {
+    val (bests, pieces) =
+      graft.operators.Fixpoint.scoped(s, seeded.count()) { cs =>
+      var pieces = onSession(cs, seeded)
+      val bests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var exhausted = false
       var k = 0
       while (k < nMerges && !exhausted) {
@@ -135,17 +137,18 @@ private[graft] object BpeCore {
           .first()
         exhausted = bestRow.isNullAt(0)
         val best =
-          if (exhausted) s.range(1).select(
+          if (exhausted) cs.range(1).select(
             lit(null).cast("string").as("a"),
             lit(null).cast("string").as("b"),
             lit(null).cast("long").as("c"))
-          else s.range(1).select(
+          else cs.range(1).select(
             lit(bestRow.getString(0)).as("a"),
             lit(bestRow.getString(1)).as("b"),
             lit(bestRow.getLong(2)).as("c"))
         bests += best
         pieces = statsBarrier(applyMerge(pieces, best).localCheckpoint())
       }
+      (bests.map(onSession(s, _)), onSession(s, pieces))
     }
 
     val merges = bests.zipWithIndex.map { case (b, i) =>

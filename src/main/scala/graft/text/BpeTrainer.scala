@@ -48,7 +48,7 @@ import graft.Tables
   * FIXPOINT DISCIPLINE: each round's pieces frame is
   * localCheckpoint'ed behind a statsBarrier (the CC-loop lesson —
   * checkpoint-forwarded stats compound per round) and the whole loop
-  * runs under [[graft.operators.Fixpoint.withScopedShuffle]] sized to
+  * runs on a [[graft.operators.Fixpoint.scoped]] child session sized to
   * the pieces row count. The per-round best pair is a 1-row GLOBAL
   * aggregate frame (min of a (−count, a, b) struct — always exactly
   * one row, NULL-fielded when no pair remains) cross-joined broadcast

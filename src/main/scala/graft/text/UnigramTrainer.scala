@@ -179,15 +179,17 @@ object UnigramTrainer {
       .localCheckpoint()
 
     val n = sp.count()
-    graft.operators.Fixpoint.withScopedShuffle(s, n) {
+    graft.operators.Fixpoint.scoped(s, n) { cs =>
+      import org.apache.spark.sql.graft.ColumnBridge.onSession
+      val (wfc, spc) = (onSession(cs, wf), onSession(cs, sp))
       // EM 1: seed scores from substring-occurrence counts.
-      val c0 = sp.groupBy("piece").agg(sum("freq").as("cnt"))
-      val vb1 = viterbi(wf, sp, score(c0)).localCheckpoint()
+      val c0 = spc.groupBy("piece").agg(sum("freq").as("cnt"))
+      val vb1 = viterbi(wfc, spc, score(c0)).localCheckpoint()
       // Usage pruning + EM 2: re-score by usage, re-segment.
       val c1 = census(vb1)
-      val vb2 = viterbi(wf, sp, score(c1)).localCheckpoint()
+      val vb2 = viterbi(wfc, spc, score(c1)).localCheckpoint()
       val vocab = census(vb2).localCheckpoint()
-      (vocab, vb2)
+      (onSession(s, vocab), onSession(s, vb2))
     }
   }
 

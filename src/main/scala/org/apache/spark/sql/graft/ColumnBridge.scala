@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into `private[sql]` Column↔Expression conversion (Spark 4
@@ -10,7 +11,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * one sanctioned-pattern seam this engine opens into Spark internals,
   * used only to surface native Catalyst expressions
   * (graft.functions.DoubleDot) as Columns without requiring session
-  * function registration, and for [[ColumnBridge.statsBarrier]] below.
+  * function registration, and for [[ColumnBridge.statsBarrier]] and
+  * [[ColumnBridge.onSession]] below.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -45,6 +47,16 @@ object ColumnBridge {
     cs.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
+
+  /** `df`'s plan rebound onto session `s`, which then plans and runs
+    * it under its own conf. Frames cross between a caller's session
+    * and a scoped child session ([[graft.GraftSession.scoped]]) only
+    * through this: a join of frames from two sessions silently runs
+    * under the LEFT side's session, so the crossing is made explicit.
+    */
+  def onSession(s: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[_]].logicalPlan)
 
   /** Release the block-manager pins of a `localCheckpoint`'ed frame.
     * `Dataset.unpersist` only consults the SQL cache manager; a local

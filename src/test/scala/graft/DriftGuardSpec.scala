@@ -48,6 +48,21 @@ class DriftGuardSpec extends AnyFunSuite {
       s"README gate ratios $ratios disagree with $n queries")
   }
 
+  test("only GraftSession sets or unsets conf in src/main") {
+    // Every conf override goes through GraftSession.scoped's child
+    // session; a `conf.set` anywhere else mutates a caller's session.
+    val offenders = Files.walk(Paths.get("src/main/scala")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "GraftSession.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if "\\bconf\\.(set|unset)\\(".r.findFirstIn(l).nonEmpty =>
+            s"$p:${i + 1}"
+        }
+      }.toSeq
+    assert(offenders.isEmpty, s"conf mutated outside GraftSession: $offenders")
+  }
+
   test("README test/suite counts match the test tree") {
     val files = Files.walk(Paths.get("src/test/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq

@@ -8,29 +8,26 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** VERDICT r6 item 6: `Fixpoint.withScopedShuffle` mutates a
-  * session-global knob, so two scoped loops overlapping on one
-  * session used to leak — the second entrant read the first's scoped
-  * value as its "previous" and restored THAT. The scope is now
-  * reference-counted per session: first entrant records the true
-  * original, every entrant can only LOWER the live value, and the
-  * last exit restores. These tests pin (a) correct results from two
-  * genuinely concurrent scoped aggregations, (b) the conf restored to
-  * the session value after both exit, (c) the non-numeric degrade
-  * path, and (d) nesting.
+/** `Fixpoint.scoped` runs a loop on a child session with its own
+  * shuffle-partition count and AQE off; the caller's session is never
+  * touched. These tests pin (a) correct results from two genuinely
+  * concurrent scoped loops, (b) the caller's conf unchanged while a
+  * loop is running, (c) loop frames planned at the scoped partition
+  * count with AQE off, and (d) a nested scope never raising the outer
+  * count.
   */
 class FixpointConcurrencySpec extends SparkSpec {
 
   private val Key = "spark.sql.shuffle.partitions"
+  private val AqeKey = "spark.sql.adaptive.enabled"
 
-  test("two concurrent scoped loops: correct results, conf restored") {
-    val orig = spark.conf.get(Key)
+  test("two concurrent scoped loops: correct results") {
     def scopedSum(mod: Int): Long =
-      Fixpoint.withScopedShuffle(spark, 100L) {
+      Fixpoint.scoped(spark, 100L) { cs =>
         // A couple of rounds of shuffle work inside the scope, with a
         // sleep so the two futures genuinely overlap their scopes.
         Thread.sleep(50)
-        val df = spark.range(0, 1000)
+        val df = cs.range(0, 1000)
           .select((col("id") % mod).as("k"), col("id").as("v"))
           .groupBy("k").agg(sum("v").as("s"))
         Thread.sleep(50)
@@ -41,24 +38,42 @@ class FixpointConcurrencySpec extends SparkSpec {
     val (a, b) = (Await.result(fa, 60.seconds), Await.result(fb, 60.seconds))
     val expect = (0L until 1000L).sum
     assert(a == expect && b == expect)
-    assert(spark.conf.get(Key) == orig,
-      s"conf leaked: ${spark.conf.get(Key)} != $orig")
   }
 
-  test("nested scopes never raise the live value and restore the " +
-    "outermost original") {
-    val orig = spark.conf.get(Key)
-    Fixpoint.withScopedShuffle(spark, 1L) {
-      val inner1 = spark.conf.get(Key)
-      // The scope may only LOWER the live value, never raise it —
-      // even when the inner request (huge row count → session cap)
-      // asks for more partitions than the outer pin.
-      assert(inner1.toLong <= orig.toLong)
-      Fixpoint.withScopedShuffle(spark, 100000000L) {
-        assert(spark.conf.get(Key).toLong <= inner1.toLong)
-      }
-      assert(spark.conf.get(Key) == inner1)
+  // A caller with more partitions than the scope's floor of 8, so the
+  // scope visibly lowers the count.
+  private def caller = graft.GraftSession.scoped(spark, Map(Key -> "16"))
+
+  test("the caller's conf, read inside the loop body, is unchanged") {
+    val orig = caller.conf.getAll
+    val inside = Fixpoint.scoped(caller, 1L) { cs =>
+      assert(cs ne caller)
+      caller.conf.getAll
     }
-    assert(spark.conf.get(Key) == orig)
+    assert(inside == orig)
+  }
+
+  test("loop frames run at the scoped partition count with AQE off") {
+    Fixpoint.scoped(caller, 1L) { cs =>
+      assert(cs.conf.get(Key) == "8" && cs.conf.get(AqeKey) == "false")
+      val df = cs.range(0, 1000).groupBy((col("id") % 5).as("k")).count()
+      assert(df.rdd.getNumPartitions == 8)
+      assert(!df.queryExecution.executedPlan.toString
+        .contains("AdaptiveSparkPlan"))
+    }
+    assert(caller.conf.get(Key) == "16" && caller.conf.get(AqeKey) == "true")
+  }
+
+  test("a nested scope never raises the outer count") {
+    Fixpoint.scoped(caller, 1L) { outer =>
+      val outerParts = outer.conf.get(Key).toLong
+      assert(outerParts < 16)
+      // A huge row count asks for the caller's full count; the inner
+      // scope's caller is the outer child, so it is capped there.
+      Fixpoint.scoped(outer, 100000000L) { inner =>
+        assert(inner.conf.get(Key).toLong <= outerParts)
+      }
+      assert(outer.conf.get(Key).toLong == outerParts)
+    }
   }
 }
