@@ -84,6 +84,31 @@ object GraftSession {
     // buy inferred isnotnull/filter pruning, which the fixture plans
     // don't need — filters are explicit and keys are non-null.
     "spark.sql.constraintPropagation.enabled" -> "false",
+    // Compiled-class cache for generated code (JVM-wide, keyed by the
+    // generated source). Spark's default of 100 entries is below this
+    // engine's working set, so warm passes recompiled with Janino:
+    // ~120 classes per pass on the 7-query relational workload, ~110
+    // on the 7-query store-read workload, 3,145 in one warm sweep of
+    // all 188 queries at sf0.01, which compiles up to 4,376 distinct
+    // classes. Guava splits the bound over 4 segments (2,048 each
+    // here, against ~1,100 classes per segment for the full sweep:
+    // ~1.9× headroom). The bound is a class count, so memory stays
+    // bounded at any data scale (the full sf0.01 sweep: +18 MB
+    // metaspace, +15 MB code heap over the default). STATIC conf:
+    // read once, when CodeGenerator is first initialised, so it only
+    // takes effect on the builder of the JVM's first session (see
+    // [[local]]).
+    "spark.sql.codegen.cache.maxEntries" -> "8192",
+    // The cache key is the generated source, and by default a
+    // whole-stage class is named after its codegen stage id. AQE
+    // plans each query stage as its inputs finish, so when independent
+    // shuffles race (ta_tfidf's two document scans) the ids can differ
+    // run to run, and the same pipeline came back under a new name and
+    // recompiled on a warm run. One class name makes the key the
+    // pipeline's code alone; identical pipelines of different stages
+    // and queries then share one class too. Stage ids stay in the plan
+    // and in the generated code's comments.
+    "spark.sql.codegen.useIdInClassName" -> "false",
     "spark.ui.enabled" -> "false",
   )
 
@@ -96,9 +121,12 @@ object GraftSession {
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
     // Pre-context overrides (e.g. SpillProof's constrained
-    // spark.memory.fraction) — only effective for the JVM's FIRST
-    // session, since local-mode executor memory is fixed at context
-    // creation; later callers get the existing context regardless.
+    // spark.memory.fraction) and static confs (the codegen cache's
+    // spark.sql.codegen.cache.maxEntries in SessionConf) — only
+    // effective for the JVM's FIRST session, since local-mode executor
+    // memory is fixed at context creation and static SQL confs are
+    // read from the context's conf; later callers get the existing
+    // context regardless.
     val spark = (SessionConf ++ extraConf).foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loader (schemas in FIXTURES.md §1).
   *
@@ -18,8 +19,33 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val raw = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events") eventsFixup(raw) else raw
+  }
+
+  /** (path, modification time, length, the session's parquet confs) →
+    * inferred schema. A read without a schema launches a one-task
+    * footer-inference job every time; the fixtures are immutable
+    * between runs, so each one's schema is inferred once. The file's
+    * mtime and length invalidate a rewritten fixture; the parquet
+    * confs are in the key because they change what inference returns
+    * (`nanosAsLong` decides `events.ts`'s type).
+    */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long, Map[String, String]), StructType]
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val readerConf = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.")
+    }
+    schemas.computeIfAbsent(
+      (path, st.getModificationTime, st.getLen, readerConf),
+      _ => spark.read.parquet(path).schema)
   }
 
   /** events.ts normalization. The fixture has shipped `ts` as BOTH
