@@ -28,9 +28,10 @@ import org.apache.spark.sql.DataFrame
   *    typical-conditions number;
   *  - `noisy` lists queries where median/min > 1.5 AND the gap
   *    exceeds 1 s — measurements the reader should distrust;
-  *  - `canary` re-times wc_wordcount at the start, middle, and end
-  *    of the sweep; its max/min ratio is a query-independent gauge of
-  *    box contention DURING this bench (≈1 on a quiet box).
+  *  - `canary` re-times wc_wordcount after the untimed cold sweep,
+  *    in the middle of rep 0 and after each rep; its max/min ratio is
+  *    a query-independent gauge of box contention DURING this bench
+  *    (≈1 on a quiet box).
   *
   * COLD/WARM DISCIPLINE (VERDICT r11 item 1): an UNTIMED full sweep
   * runs first, paying every shared Lineage/store build exactly where
@@ -101,8 +102,8 @@ object Bench {
       df.write.format("noop").mode("overwrite").save()
 
     // Warm the JVM once on the smallest SF, and warm the canary query
-    // itself, or its first timing measures codegen compilation and
-    // fakes a contention ratio on a quiet box. This warms the JIT,
+    // itself for runs whose sweep skips it (SPARK_GRAFT_ONLY) or has no
+    // cold pass (SPARK_GRAFT_WARMUP=off). This warms the JIT,
     // not the generated code of the sweep: the compiled classes stay
     // warm across the timed reps only because the codegen class cache
     // holds the whole sweep's working set (GraftSession.SessionConf);
@@ -141,7 +142,6 @@ object Bench {
     // minima in stalled sweeps vs 0.9/1.3 s interleaved-or-quiet).
     // With full-sweep spacing (~minutes) between a query's reps, one
     // burst can contaminate at most one rep, and the min survives.
-    canary()
     val times = scala.collection.mutable.LinkedHashMap(
       targets.map { case (n, _) =>
         n -> scala.collection.mutable.ArrayBuffer[Double]()
@@ -199,8 +199,11 @@ object Bench {
           lineagePaid(name) = lineagePaid.getOrElse(name, Set.empty) ++
             built.map(k => s"${k.stripPrefix(s"$sfDir#")}@warmup")
       }
-      canary()
     }
+    // The first canary timing follows the cold sweep: any earlier,
+    // after a single warm-up run, it measures JIT warm-up, not
+    // contention, and sets the ratio on a quiet box.
+    canary()
     for (r <- 0 until reps) {
       targets.zipWithIndex.foreach { case ((name, fn), i) =>
         if (r == 0 && i > 0 && i == targets.size / 2) canary()

@@ -143,7 +143,7 @@ object AudioFp {
   }
 
   def audioDedup(s: SparkSession, dir: String): DataFrame = {
-    val hs = HammingBlock.ckpt(hashed(s, dir)) // count + both join sides
+    val hs = hashed(s, dir).localCheckpoint() // count + both join sides
     HammingBlock.pairs(HammingBlock.capSample(hs, "aud_id", PairCap),
         "aud_id", Chunks, ChunkBits, MaxHam)
       .orderBy("aud_a", "aud_b")

@@ -24,28 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object HammingBlock {
 
-  /** Pinned-checkpoint registry shared by the Hamming-block callers
-    * (ADVICE r10): a hashed frame consumed by a count and both join
-    * sides is localCheckpointed ONCE here and released on
-    * Lineage.clear — the RagRetrieve/BpeCore discipline, so repeated
-    * invocations between clears no longer accumulate block-manager
-    * storage until ContextCleaner GC.
-    */
-  private val issued =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  graft.operators.Lineage.onClear(() => issued.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    issued.foreach(releaseCheckpoint)
-    issued.clear()
-  })
-
-  private[multimodal] def ckpt(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint()
-    issued.synchronized { issued += c }
-    c
-  }
-
   /** Blocked near-dup pairs over an (idCol, ph) frame: chunk
     * equi-join candidates, exact Hamming ≤ `maxHam` verify. Callers'
     * specs prove blocked ≡ brute-force on crafted frames.

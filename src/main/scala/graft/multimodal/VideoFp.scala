@@ -225,7 +225,7 @@ object VideoFp {
   }
 
   def videoDedup(s: SparkSession, dir: String): DataFrame = {
-    val hs = HammingBlock.ckpt(hashed(s, dir)) // count + both join sides
+    val hs = hashed(s, dir).localCheckpoint() // count + both join sides
     HammingBlock.pairs(HammingBlock.capSample(hs, "vid_id", PairCap),
         "vid_id", Chunks, ChunkBits, MaxHam)
       .orderBy("vid_a", "vid_b")

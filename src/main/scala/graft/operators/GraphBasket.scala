@@ -47,7 +47,7 @@ object GraphBasket {
   // (q49/q50/q52/q60) — and of every rep of each in a bench sweep.
   // Persisted per (session, dir) via the engine-wide [[Lineage]]
   // helper (round 6: hoisted out of this file so the near-dup CC and
-  // kNN-edge families share the same race-safe cache + clear() hook).
+  // kNN-edge families share the same race-safe cache).
   private def materialized(s: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame =
     Lineage.materialized(s, dir, s"graph_$key")(build)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** MATERIALIZED SHARED LINEAGE, engine-wide (VERDICT r5 item 2).
@@ -23,11 +23,34 @@ import org.apache.spark.storage.StorageLevel
   * for the JVM's life) so a plain global lock around the build is the
   * simple correct shape; [[clear]] unpersists and resets for tests and
   * long-lived sessions.
+  *
+  * This is the only registry that keeps frames across calls. Every
+  * other checkpoint in the engine is a plain `localCheckpoint()` held
+  * by the plan that reads it, and Spark's `ContextCleaner` frees its
+  * blocks once that plan is unreachable; a module-level list of
+  * issued checkpoints would pin every run's blocks for the JVM's life.
   */
 object Lineage {
 
   private val cache = scala.collection.mutable.Map
-    .empty[(SparkSession, String, String), DataFrame]
+    .empty[(SparkSession, String, String), Any]
+
+  /** SPARK_GRAFT_LINEAGE=off: run every query on its raw lineage, no
+    * sharing and no block-manager caching. For harnesses that
+    * deliberately starve the unified pool (SpillProofSpec's 11 MB
+    * JVM): cache write/read buffers there compete with the very
+    * operators under test, while production pre-materializes these
+    * frames as real tables in separate jobs with their own memory. The
+    * off switch reproduces the pre-cache plan shape those gates were
+    * written against.
+    */
+  private def off: Boolean =
+    sys.env.get("SPARK_GRAFT_LINEAGE").contains("off")
+
+  private def memo[T](k: (SparkSession, String, String))(build: => T): T =
+    cache.synchronized {
+      cache.getOrElseUpdate(k, timed(k)(build)).asInstanceOf[T]
+    }
 
   /** Wall seconds each key's build took (the BUILD lambda — for
     * [[materialized]] that is plan construction, persist() is lazy, so
@@ -72,7 +95,7 @@ object Lineage {
   def parallel(s: SparkSession, dir: String,
       builds: Seq[(String, () => DataFrame)],
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Unit =
-    if (!sys.env.get("SPARK_GRAFT_LINEAGE").contains("off")) {
+    if (!off) {
       val missing = cache.synchronized {
         builds.filterNot { case (k, _) => cache.contains((s, dir, k)) }
       }
@@ -132,50 +155,35 @@ object Lineage {
   def materialized(s: SparkSession, dir: String, key: String,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK)(
       build: => DataFrame): DataFrame =
-    // SPARK_GRAFT_LINEAGE=off: run every query on its raw lineage,
-    // no block-manager caching. For harnesses that deliberately
-    // starve the unified pool (SpillProofSpec's 11 MB JVM): cache
-    // write/read buffers there compete with the very operators under
-    // test, while production pre-materializes these frames as real
-    // tables in separate jobs with their own memory. The off switch
-    // reproduces the pre-cache plan shape those gates were written
-    // against.
-    if (sys.env.get("SPARK_GRAFT_LINEAGE").contains("off")) build
-    else cache.synchronized {
-      cache.getOrElseUpdate((s, dir, key),
-        timed((s, dir, key))(build.persist(level)))
-    }
+    if (off) build else memo((s, dir, key))(build.persist(level))
+
+  /** The value built by `build`, shared by every later caller with the
+    * same (session, dir, key) — the [[materialized]] twin for builds
+    * that yield more than one frame (a trainer's merge table and final
+    * pieces). The build localCheckpoints its frames; this registry
+    * holds them, so they live until [[clear]].
+    */
+  def shared[T](s: SparkSession, dir: String, key: String)(build: => T): T =
+    if (off) build else memo((s, dir, key))(build)
 
   /** Run `once` the first time this (session, dir, key) is seen — the
     * side-effect twin of [[materialized]] for non-frame shared work
     * (fixture writes, bucketed-table layouts).
     */
   def ensure(s: SparkSession, dir: String, key: String)(once: => Unit): Unit =
-    cache.synchronized {
-      cache.getOrElseUpdate((s, dir, key),
-        { timed((s, dir, key))(once); null })
-    }
-
-  /** Caches that live OUTSIDE this map (the two-frame trainer memos)
-    * register a hook so [[clear]] releases them too — artifact
-    * lifetime follows the shared-lineage lifecycle (ADVICE r7).
-    */
-  private val clearHooks = scala.collection.mutable.ArrayBuffer
-    .empty[() => Unit]
-
-  def onClear(hook: () => Unit): Unit =
-    clearHooks.synchronized { clearHooks += hook }
+    memo((s, dir, key))(once)
 
   /** Unpersist every cached frame and forget all keys (tests /
-    * long-lived sessions that switch datasets), then run the
-    * registered external-cache hooks.
+    * long-lived sessions that switch datasets). The checkpoints held by
+    * [[shared]] values are then unreferenced, and `ContextCleaner`
+    * frees their blocks.
     */
-  def clear(): Unit = {
-    cache.synchronized {
-      cache.values.foreach(df => if (df != null) df.unpersist())
-      cache.clear()
+  def clear(): Unit = cache.synchronized {
+    cache.values.foreach {
+      case df: Dataset[_] => df.unpersist()
+      case _ => ()
     }
-    clearHooks.synchronized { clearHooks.toSeq }.foreach(_.apply())
+    cache.clear()
   }
 
   /** The keys currently registered for `s` (as `dir#key`). Bench
@@ -191,11 +199,4 @@ object Lineage {
       case (ss, d, k) if ss eq s => s"$d#$k"
     }.toSet
   }
-
-  /** Register a marker key without a frame — for shared builds that
-    * live outside this cache (e.g. the two-frame BPE memo), so Bench's
-    * snapshot diff sees them too.
-    */
-  def note(s: SparkSession, dir: String, key: String): Unit =
-    ensure(s, dir, key)(())
 }

@@ -94,21 +94,6 @@ object CorpusOps {
     * over [[VocabParts]] rows — a constant-bounded frame, the same
     * class as a broadcast 1-row aggregate.
     */
-  /** Checkpointed layouts issued by [[rankedIds]], released with the
-    * shared-lineage lifecycle (ADVICE r8: every call pinned its
-    * checkpoint RDD blocks until the ContextCleaner happened to GC
-    * them; the hook makes release deterministic, the same discipline
-    * as the trainer memos).
-    */
-  private val issuedLayouts =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  graft.operators.Lineage.onClear(() => issuedLayouts.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    issuedLayouts.foreach(releaseCheckpoint)
-    issuedLayouts.clear()
-  })
-
   private[graft] def rankedIds(counted: DataFrame, keyCol: String,
       cntCol: String, idCol: String): DataFrame =
     zipIndex(counted, Seq(desc(cntCol), asc(keyCol)), idCol)
@@ -136,7 +121,6 @@ object CorpusOps {
       .withColumn("pid", shiftright(col("mono"), 33))
       .withColumn("rn", col("mono").bitwiseAND(lit((1L << 33) - 1)))
       .localCheckpoint()
-    issuedLayouts.synchronized { issuedLayouts += laid }
     val offsets = laid.groupBy("pid").agg(count(lit(1)).as("psz"))
       .withColumn("off",
         coalesce(sum("psz").over(Window.orderBy("pid")

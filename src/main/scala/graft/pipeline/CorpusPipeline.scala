@@ -104,25 +104,6 @@ object CorpusPipeline {
     */
   val PipeSpanK: Int = 5
 
-  /** Stage-internal localCheckpoints (shingle/token frames consumed
-    * by multiple subtrees), released with the shared-lineage
-    * lifecycle — the BpeCore/rankedIds discipline.
-    */
-  private val issued =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  Lineage.onClear(() => issued.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    issued.foreach(releaseCheckpoint)
-    issued.clear()
-  })
-
-  private def ckpt(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint()
-    issued.synchronized { issued += c }
-    c
-  }
-
   // ---- stage functions: each takes the previous stage's frame ----
 
   /** Stage 0+1: (doc_id, text) → (doc_id, clean). NFC-normalize the
@@ -209,10 +190,10 @@ object CorpusPipeline {
     * uses.
     */
   def decontamStage(surv: DataFrame, bench: DataFrame): DataFrame = {
-    val tsh = ckpt(Dedup.shingleFrame(
-      surv.select(col("doc_id"), col("clean").as("text"))))
-    val bsh = ckpt(Dedup.shingleFrame(
-      bench.select(col("doc_id"), col("clean").as("text"))))
+    val tsh = Dedup.shingleFrame(
+      surv.select(col("doc_id"), col("clean").as("text"))).localCheckpoint()
+    val bsh = Dedup.shingleFrame(
+      bench.select(col("doc_id"), col("clean").as("text"))).localCheckpoint()
     val ev = bsh.select(explode(col("shingles")).as("sg")).distinct()
     val ovl = Dedup.bloomOverlap(tsh, ev)
     surv.join(ovl, Seq("doc_id"), "left")
@@ -268,10 +249,11 @@ object CorpusPipeline {
   private def scrubCore(kept: DataFrame,
       priorSpans: Option[DataFrame]): DataFrame = {
     val K = PipeSpanK
-    val toked = ckpt(kept
+    val toked = kept
       .select(col("doc_id"), TextHash.tokens(col("clean")).as("toks"))
-      .filter(size(col("toks")) >= K))
-    val spans = ckpt(spanFrame(kept))
+      .filter(size(col("toks")) >= K)
+      .localCheckpoint()
+    val spans = spanFrame(kept).localCheckpoint()
     // The groupBy-derived duplicate set is distinct by construction;
     // the union + distinct applies ONLY on the prior-span branch
     // (ADVICE r11: the batch path previously paid a redundant

@@ -117,41 +117,6 @@ object RagRetrieve {
     }
   }
 
-  /** Double-consumed side frames (band explode + vector attach),
-    * localCheckpointed and released with the shared-lineage
-    * lifecycle — the BpeCore/CorpusPipeline discipline. ADVICE r10:
-    * additionally drained at the START of each retrieval build
-    * ([[releaseIssued]]) so repeated invocations between Lineage
-    * clears reuse storage instead of accumulating two pinned frames
-    * per call.
-    *
-    * SERIAL-EVALUATION PRECONDITION (ADVICE r11): because each build
-    * drains the previous invocation's checkpoints, a DataFrame
-    * returned by one [[queries]] entry must be fully evaluated (or
-    * abandoned) BEFORE the next entry is invoked — a caller holding
-    * an uncollected result across a second call would read released
-    * checkpoint blocks. Verify/Bench evaluate strictly serially
-    * (build → sink → next), which is the pattern this registry is
-    * designed for; a concurrent server would key registries
-    * per-invocation instead.
-    */
-  private val issued =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  graft.operators.Lineage.onClear(() => releaseIssued())
-
-  private def releaseIssued(): Unit = issued.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    issued.foreach(releaseCheckpoint)
-    issued.clear()
-  }
-
-  private def ckpt(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint()
-    issued.synchronized { issued += c }
-    c
-  }
-
   /** The band-bits rung for a corpus-chunk-count column. */
   private def rungOf(n: Column): Column =
     (MinBits until MaxBits).reverse
@@ -254,12 +219,10 @@ object RagRetrieve {
     * `ss_rag_retrieve` and `ss_rag_recall`, Lineage-materialized
     * (round 14: both queries consume both frames; the round-13
     * per-invocation localCheckpoints re-ran the embed + band sketch
-    * per rep). Releases the previous invocation's per-invocation
-    * pinned frames first (ADVICE r10).
+    * per rep).
     */
   private def frames(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    releaseIssued()
     val corpE = corpEmb(s, dir)
     // The rung derives from the CORPUS side's embedded-chunk count
     // and rides both plans as one broadcast 1-row scalar (the PHash
@@ -465,9 +428,9 @@ object RagRetrieve {
     // re-verified (the SQL twin still derives both surfaces from its
     // one `cand` CTE).
     val ret = graft.operators.PhaseLog.phase("rag recall: ret ckpt") {
-      ckpt(rerank(
+      rerank(
         bandCandidates(qry.join(broadcast(mqDocs), "doc_id"), corp),
-        qry, corp))
+        qry, corp).localCheckpoint()
     }
     val mq = mqDocs.select(col("doc_id").as("q_doc_id"))
       .join(qry.select(col("doc_id").as("q_doc_id"),
@@ -491,7 +454,7 @@ object RagRetrieve {
       .filter(col("trk") <= TopK)
       .select("q_doc_id", "doc_id", "chunk_idx")
     val truthC = graft.operators.PhaseLog.phase("rag recall: truth ckpt") {
-      ckpt(truth)
+      truth.localCheckpoint()
     }
     val nQ = qry.agg(count(lit(1)).as("n_queries"))
     // A query retrieves iff ≥ 1 band candidate exists: LEFT SEMI over
@@ -554,7 +517,6 @@ object RagRetrieve {
 
   def ragIndex(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.l2norm
-    releaseIssued()
     val path = gatePath(s, dir)
     // The embed passes are the [[corpEmb]]/[[qryEmb]] shared frames
     // (round 14) — this query previously re-ran both full
@@ -568,11 +530,12 @@ object RagRetrieve {
     // assigns the identical ids with no data-sized single-partition
     // stage, and carries v/nrm through its one range exchange so the
     // old ids⋈corpE re-join disappears too.
-    val corpV = ckpt(graft.pipeline.CorpusOps.zipIndex(
+    val corpV = graft.pipeline.CorpusOps.zipIndex(
         corpE, Seq(asc("doc_id"), asc("chunk_idx")), "vec_id")
       .select(col("vec_id"), col("doc_id"), col("chunk_idx"),
         transform(col("v"), x => x.cast("double")).as("v"))
-      .withColumn("nrm", l2norm(col("v"))))
+      .withColumn("nrm", l2norm(col("v")))
+      .localCheckpoint()
     // The SERVING BATCH is the bounded md5 sample (128× find: probing
     // ALL held-out queries makes ADC work ∝ queries × occupancy =
     // N²/K under the fixed coarse quantizer — queries-per-batch is a
@@ -580,10 +543,11 @@ object RagRetrieve {
     // the corpus side alone scales; measured 11.5×/10× before,
     // linear after).
     val qE = qryEmb(s, dir)
-    val qV = ckpt(sampleDocIds(qE).join(qE, "doc_id")
+    val qV = sampleDocIds(qE).join(qE, "doc_id")
       .select((col("doc_id") + QOff).as("query_id"),
         transform(col("v"), x => x.cast("double")).as("qv"))
-      .withColumn("qn", l2norm(col("qv"))))
+      .withColumn("qn", l2norm(col("qv")))
+      .localCheckpoint()
     graft.operators.Lineage.ensure(s, dir, "ss_rag_index_store") {
       val et = VectorIndex.phase("rag: threshold ckpt") {
         VectorIndex.withThreshold(

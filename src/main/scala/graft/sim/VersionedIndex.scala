@@ -210,10 +210,6 @@ object VersionedIndex {
       .write.mode("append").partitionBy("pub", "cid")
       .parquet(listsDir(root))
     commit(s, root, Manifest(v, pub, Seq(pub)))
-    // Both consumers (the three writes) have executed; release the
-    // Lloyd memos (the ADVICE-r8 checkpoint-release discipline).
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    releaseCheckpoint(cent); releaseCheckpoint(cb)
     v
   }
 

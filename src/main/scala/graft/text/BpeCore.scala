@@ -18,35 +18,6 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object BpeCore {
 
-  /** Checkpointed multi-consumer frames issued by [[packExamples]]
-    * and the score/round-trip chains (round 13: generalized from the
-    * per-doc counts alone), released with the shared-lineage
-    * lifecycle (ADVICE r9: every pack invocation pinned its
-    * checkpoint's RDD blocks until the ContextCleaner happened to GC
-    * them — the same class the `rankedIds` layouts had, fixed with
-    * the same hook).
-    */
-  private val issuedCounts =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  graft.operators.Lineage.onClear(() => issuedCounts.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    issuedCounts.foreach(releaseCheckpoint)
-    issuedCounts.clear()
-  })
-
-  /** localCheckpoint + release-registration for a frame consumed by
-    * several subtrees of one query — each un-checkpointed consumer
-    * otherwise re-runs the tokenize + explode + dictionary-join
-    * chain below it per action (measured: 3 full corpus tokenize
-    * passes per pack row, 2 window sorts of the piece-id stream).
-    */
-  private[text] def ckpt(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint()
-    issuedCounts.synchronized { issuedCounts += c }
-    c
-  }
-
   /** One greedy left-to-right non-overlapping merge application.
     *
     * `ld` is the pieces frame with the lookahead column already
@@ -191,13 +162,13 @@ private[graft] object BpeCore {
     // union — without the checkpoints each consumer re-ran the
     // tokenize/explode/dictionary chain (3×) and the per-doc window
     // sort (2×) per pack row (round 13; values unchanged — the
-    // checkpoint is an identity).
-    val stream = if (sharedStream) stream0 else ckpt(stream0)
-    val pieceIds = ckpt(pieceIdFrame(stream))
+    // checkpoint is an identity). The returned plan holds them, so
+    // ContextCleaner frees their blocks once the caller drops it.
+    val stream = if (sharedStream) stream0 else stream0.localCheckpoint()
+    val pieceIds = pieceIdFrame(stream).localCheckpoint()
     val counts = pieceIds.groupBy("doc_id")
       .agg(count(lit(1)).as("npc"))
       .localCheckpoint() // shared by the EOS rows and the offsets
-    issuedCounts.synchronized { issuedCounts += counts }
     val pid = pieceIds.unionByName(counts
       .select(col("doc_id"), col("npc").as("pi"), lit(0L).as("vid")))
     val wOfs = Window.partitionBy("bucket").orderBy("doc_id")

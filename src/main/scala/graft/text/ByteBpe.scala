@@ -96,56 +96,19 @@ object ByteBpe {
   private def pretoks(s: SparkSession, dir: String): DataFrame =
     pretoksWith(PretokRegex)(s, dir)
 
-  /** Two-frame session memo — the [[BpeTrainer.artifacts]] twin for
-    * the byte-level artifacts, released by `Lineage.clear()` like the
-    * word-level ones.
+  /** The [[BpeTrainer.artifacts]] twin for the byte-level artifacts:
+    * one [[graft.operators.Lineage.shared]] value per (session, dir).
     */
-  private val memo = scala.collection.mutable.Map
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  graft.operators.Lineage.onClear(() => memo.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    memo.values.foreach { case (a, b) =>
-      releaseCheckpoint(a); releaseCheckpoint(b)
-    }
-    memo.clear()
-  })
-
   private[graft] def artifacts(s: SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    if (sys.env.get("SPARK_GRAFT_LINEAGE").contains("off"))
-      train(PretokRegex)(s, dir)
-    else memo.synchronized {
-      memo.getOrElseUpdate((s, dir), {
-        graft.operators.Lineage.note(s, dir, "ta_bpe_bytes_artifacts")
-        train(PretokRegex)(s, dir)
-      })
-    }
+    graft.operators.Lineage.shared(s, dir, "ta_bpe_bytes_artifacts")(
+      train(PretokRegex)(s, dir))
 
-  /** Space-prefix twin of [[artifacts]] (its own memo key shape is
-    * unnecessary: one extra map keyed by session+dir).
-    */
-  private val memoSp = scala.collection.mutable.Map
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  graft.operators.Lineage.onClear(() => memoSp.synchronized {
-    import org.apache.spark.sql.graft.ColumnBridge.releaseCheckpoint
-    memoSp.values.foreach { case (a, b) =>
-      releaseCheckpoint(a); releaseCheckpoint(b)
-    }
-    memoSp.clear()
-  })
-
+  /** Space-prefix twin of [[artifacts]]. */
   private[graft] def artifactsSp(s: SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    if (sys.env.get("SPARK_GRAFT_LINEAGE").contains("off"))
-      train(SpPretokRegex)(s, dir)
-    else memoSp.synchronized {
-      memoSp.getOrElseUpdate((s, dir), {
-        graft.operators.Lineage.note(s, dir, "ta_bpe_sp_artifacts")
-        train(SpPretokRegex)(s, dir)
-      })
-    }
+    graft.operators.Lineage.shared(s, dir, "ta_bpe_sp_artifacts")(
+      train(SpPretokRegex)(s, dir))
 
   /** Byte seed: pos i ↦ hex pair (2i−1, 2i) of the pretoken's hex
     * string, then the shared merge loop — over an arbitrary

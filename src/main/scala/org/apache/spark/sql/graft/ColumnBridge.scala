@@ -57,17 +57,4 @@ object ColumnBridge {
   def onSession(s: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[_]].logicalPlan)
-
-  /** Release the block-manager pins of a `localCheckpoint`'ed frame.
-    * `Dataset.unpersist` only consults the SQL cache manager; a local
-    * checkpoint's data lives as RDD blocks under the `LogicalRDD` leaf
-    * — unpersist THAT rdd or the blocks stay pinned for the session's
-    * life (ADVICE r7: trainer memos outlived `Lineage.clear()`).
-    */
-  def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

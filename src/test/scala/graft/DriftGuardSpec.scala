@@ -48,19 +48,46 @@ class DriftGuardSpec extends AnyFunSuite {
       s"README gate ratios $ratios disagree with $n queries")
   }
 
+  /** The `src/main` Scala files other than `exempt`. */
+  private def mainSources(exempt: String): Seq[Path] =
+    Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == exempt).toSeq
+
   test("only GraftSession sets or unsets conf in src/main") {
     // Every conf override goes through GraftSession.scoped's child
     // session; a `conf.set` anywhere else mutates a caller's session.
-    val offenders = Files.walk(Paths.get("src/main/scala")).iterator()
-      .asScala.filter(_.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "GraftSession.scala")
-      .flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (l, i) if "\\bconf\\.(set|unset)\\(".r.findFirstIn(l).nonEmpty =>
-            s"$p:${i + 1}"
-        }
-      }.toSeq
+    val offenders = mainSources("GraftSession.scala").flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if "\\bconf\\.(set|unset)\\(".r.findFirstIn(l).nonEmpty =>
+          s"$p:${i + 1}"
+      }
+    }
     assert(offenders.isEmpty, s"conf mutated outside GraftSession: $offenders")
+  }
+
+  test("only Lineage keeps frames across calls") {
+    // A mutable collection of frames held by an object outlives every
+    // run that fills it, and so do the block-manager pins of its
+    // checkpoints. Shared frames live in Lineage; a run's own
+    // checkpoints are held by its plan, and ContextCleaner frees them
+    // once the plan is unreachable. Scans each object member
+    // declaration (two-space indent) with up to two continuation lines.
+    val member = ("(?m)^  (?:private(?:\\[\\w+\\])? )?(?:lazy )?va[lr] " +
+      "\\w+.*(?:\\n    .*){0,2}").r
+    val mutableColl =
+      "mutable\\.|TrieMap|Concurrent\\w*Map|ArrayBuffer|ListBuffer".r
+    val frame = "\\b(DataFrame|Dataset)\\b".r
+    val offenders = mainSources("Lineage.scala").flatMap { p =>
+      val src = new String(Files.readAllBytes(p), "UTF-8")
+      member.findAllMatchIn(src).collect {
+        case m if mutableColl.findFirstIn(m.matched).nonEmpty &&
+            frame.findFirstIn(m.matched).nonEmpty =>
+          s"$p:${src.take(m.start).count(_ == '\n') + 1}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"object-level frame collections outside Lineage: $offenders")
   }
 
   test("README test/suite counts match the test tree") {

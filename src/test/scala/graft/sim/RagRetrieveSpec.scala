@@ -180,6 +180,15 @@ class RagRetrieveSpec extends SparkSpec {
     }
   }
 
+  test("ss_rag_index: a second build leaves the first build's frame " +
+    "readable") {
+    val a = RagRetrieve.ragIndex(spark, sf)
+    val b = RagRetrieve.ragIndex(spark, sf)
+    val rowsB = b.collect().map(_.toString).sorted.toSeq
+    assert(rowsB.nonEmpty)
+    assert(a.collect().map(_.toString).sorted.toSeq === rowsB)
+  }
+
   test("fixture: ranking contract and the held-out split") {
     val out = RagRetrieve.ragRetrieve(spark, sf).collect()
     assert(out.nonEmpty)
