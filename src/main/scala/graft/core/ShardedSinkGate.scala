@@ -70,10 +70,7 @@ object ShardedSinkGate {
 
   def shardedSink(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val out =
-      s"/tmp/graft_sharded_${md}_${s.sparkContext.applicationId}/out"
+    val out = StoreRoot.path(s, "sharded", dir) + "/out"
     val shards = math.max(Shards.toLong,
       (Tables(s, dir, "lineitem").count() + ShardRows - 1) / ShardRows)
       .toInt

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.core.StoreRoot
 import graft.functions.TextHash
 
 /** RAG RETRIEVAL COMPOSITION (`ss_rag_retrieve`, round 10) — the
@@ -507,17 +508,9 @@ object RagRetrieve {
   /** Query-id offset: far above any dense-rank vec_id. */
   val QOff: Long = 1L << 40
 
-  private def gatePath(s: SparkSession, dir: String): String = {
-    graft.operators.GateSweep.sweepStale()
-    "/tmp/graft_rag_index_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-      s"_${ProcessHandle.current().pid()}_${System.identityHashCode(s)}"
-  }
-
   def ragIndex(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.l2norm
-    val path = gatePath(s, dir)
+    val path = StoreRoot.path(s, "rag_index", dir)
     // The embed passes are the [[corpEmb]]/[[qryEmb]] shared frames
     // (round 14) — this query previously re-ran both full
     // chunk+tokenize+scatter-sum passes per invocation.

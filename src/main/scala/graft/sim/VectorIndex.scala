@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.StoreRoot
+
 /** PERSISTED IVFPQ INDEX with incremental add (VERDICT r6 item 3).
   *
   * The session-cached Lineage frames are the wrong LIFETIME for a
@@ -276,25 +278,12 @@ object VectorIndex {
     e.crossJoin(broadcast(
       e.agg(floor(count(lit(1)) * lit(BaseFrac)).cast("long").as("thr"))))
 
-  /** Scratch location for the declared gate's artifact — per dataset
-    * AND per (process, session): Lineage.ensure rebuilds once per
-    * session, so a shared path would let two concurrent harness JVMs
-    * (or two sessions in one JVM) clobber each other's store mid-
-    * read. The production artifact API above takes a caller-chosen
-    * path; this scoping is purely gate-harness hygiene.
-    */
-  private def gatePath(s: SparkSession, dir: String): String = {
-    graft.operators.GateSweep.sweepStale() // ADVICE r8: reap dead pids
-    "/tmp/graft_ivfpq_index_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-      s"_${ProcessHandle.current().pid()}_${System.identityHashCode(s)}"
-  }
-
   // -----------------------------------------------------------------
   // ss_ivfpq_incr: the full persisted-index lifecycle, oracle-gated.
+  // The production artifact API above takes a caller-chosen path; the
+  // declared gate's store lives in the session's [[StoreRoot]].
   def ivfPqIncremental(s: SparkSession, dir: String): DataFrame = {
-    val path = gatePath(s, dir)
+    val path = StoreRoot.path(s, "ivfpq_index", dir)
     graft.operators.Lineage.ensure(s, dir, "ss_ivfpq_incr_store") {
       // The build/append chain (Lloyd rounds + batch encodes) is
       // bound to the typed-hash child session via its input frame

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.StoreRoot
+
 /** VERSIONED ANN INDEX — atomic publish for CONCURRENT READERS
   * (round-8 forward item: "version-pointer atomic index publish").
   *
@@ -563,17 +565,8 @@ object VersionedIndex {
   // express — that v1 still answers with the BASE-ONLY result after
   // v2 commits (snapshot isolation), the crash-window and gc
   // behaviors.
-  private def gatePath(s: SparkSession, dir: String,
-      family: String = "vindex"): String = {
-    graft.operators.GateSweep.sweepStale()
-    s"/tmp/graft_${family}_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-      s"_${ProcessHandle.current().pid()}_${System.identityHashCode(s)}"
-  }
-
   def versionSearch(s: SparkSession, dir: String): DataFrame = {
-    val root = gatePath(s, dir)
+    val root = StoreRoot.path(s, "vindex", dir)
     graft.operators.Lineage.ensure(s, dir, "ss_version_store") {
       val fs = hfs(s, root)
       fs.delete(new HPath(root), true) // a crashed previous run
@@ -599,7 +592,7 @@ object VersionedIndex {
   // (family "vsplit") — the split must never mutate the snapshot
   // ss_version_search's newest-version search resolves.
   def splitSearch(s: SparkSession, dir: String): DataFrame = {
-    val root = gatePath(s, dir, "vsplit")
+    val root = StoreRoot.path(s, "vsplit", dir)
     graft.operators.Lineage.ensure(s, dir, "ss_split_store") {
       val fs = hfs(s, root)
       fs.delete(new HPath(root), true)
@@ -633,7 +626,7 @@ object VersionedIndex {
   // of the declared behavior, not just a spec nicety). Own store
   // root (family "vdelete").
   def deleteSearch(s: SparkSession, dir: String): DataFrame = {
-    val root = gatePath(s, dir, "vdelete")
+    val root = StoreRoot.path(s, "vdelete", dir)
     graft.operators.Lineage.ensure(s, dir, "ss_delete_store") {
       val fs = hfs(s, root)
       fs.delete(new HPath(root), true)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.core.StoreRoot
 import graft.dedup.Dedup
 import graft.sources.Formats
 
@@ -348,16 +349,8 @@ object DedupIngest {
   private[graft] val HistMod = 7
   private[graft] val Waves = 3
 
-  private def gatePath(s: SparkSession, dir: String): String = {
-    graft.operators.GateSweep.sweepStale() // ADVICE r8: reap dead pids
-    "/tmp/graft_dedup_ingest_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-      s"_${ProcessHandle.current().pid()}_${System.identityHashCode(s)}"
-  }
-
   def streamDedup(s0: SparkSession, dir: String): DataFrame = {
-    val path = gatePath(s0, dir)
+    val path = StoreRoot.path(s0, "dedup_ingest", dir)
     graft.operators.Lineage.ensure(s0, dir, "dd_stream_store") {
       // Store build on a child session with wave-sized shuffle
       // partitions (round 13, the PipeIngest.pipeStreamIngest

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.core.StoreRoot
 import graft.sim.VectorIndex
 import graft.sources.Formats
 
@@ -122,17 +123,9 @@ object IndexIngest {
   // over sealed ∪ staged must hash-match the same oracle as the
   // batch-appended store (`ss_ivfpq_incr`'s SQL, reused VERBATIM):
   // growing-segment reads are not weaker than sealed reads.
-  private def gatePath(s: SparkSession, dir: String): String = {
-    graft.operators.GateSweep.sweepStale() // ADVICE r8: reap dead pids
-    "/tmp/graft_ingest_gate_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-      s"_${ProcessHandle.current().pid()}_${System.identityHashCode(s)}"
-  }
-
   def ingestSearch(s0: SparkSession, dir: String): DataFrame = {
     import graft.sim.{VectorIndex, VectorSearch}
-    val path = gatePath(s0, dir)
+    val path = StoreRoot.path(s0, "ingest_gate", dir)
     graft.operators.Lineage.ensure(s0, dir, "ss_ingest_store") {
       // Store build on a child session with wave-sized shuffle
       // partitions (round 13, the PipeIngest.pipeStreamIngest

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.GraftSession
+import graft.core.StoreRoot
 import graft.dedup.Dedup
 import graft.pipeline.CorpusPipeline
 import graft.sources.Formats
@@ -601,17 +602,8 @@ object PipeIngest {
   private[graft] val HistMod = DedupIngest.HistMod
   private[graft] val Waves = DedupIngest.Waves
 
-  private def gatePath(s: SparkSession, dir: String,
-      family: String): String = {
-    graft.operators.GateSweep.sweepStale()
-    s"/tmp/graft_${family}_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-      s"_${ProcessHandle.current().pid()}_${System.identityHashCode(s)}"
-  }
-
   def pipeStreamIngest(s0: SparkSession, dir: String): DataFrame = {
-    val path = gatePath(s0, dir, "pipe_ingest")
+    val path = StoreRoot.path(s0, "pipe_ingest", dir)
     graft.operators.Lineage.ensure(s0, dir, "pipe_stream_store") {
       // Store build on a child session sized to the WAVE volume: the
       // micro-batch waves and artifact training ran on the caller's 32
@@ -667,7 +659,7 @@ object PipeIngest {
   // batch_id = −1 through the stored-tokenizer encode, everything
   // else bit-identical to its sealed row.
   def pipeCompact(s0: SparkSession, dir: String): DataFrame = {
-    val path = gatePath(s0, dir, "pipe_compact")
+    val path = StoreRoot.path(s0, "pipe_compact", dir)
     graft.operators.Lineage.ensure(s0, dir, "pipe_compact_store") {
       // Wave-sized child session, as in pipeStreamIngest.
       val s = GraftSession.scoped(s0, GraftSession.wavePartitions(s0))
@@ -720,7 +712,7 @@ object PipeIngest {
   private[graft] val EvalMod = CorpusPipeline.PipeEvalMod
 
   private def fullStore(s0: SparkSession, dir: String): String = {
-    val path = gatePath(s0, dir, "pipe_full")
+    val path = StoreRoot.path(s0, "pipe_full", dir)
     graft.operators.Lineage.ensure(s0, dir, "pipe_stream_full_store") {
       // Wave-sized child session, as in pipeStreamIngest.
       val s = GraftSession.scoped(s0, GraftSession.wavePartitions(s0))

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
+import graft.core.StoreRoot
+
 /** RATE-SOURCE streaming ingest, oracle-gated (VERDICT r5 item 7 —
   * the one Structured Streaming source kind the surface had not yet
   * exercised; the file source backs every other streaming gate).
@@ -107,7 +109,7 @@ object RateIngest {
         col("n"), col("sum_v"))
 
     val qn = "st_rate_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Paths.get(s"/tmp/graft_ckpt_$qn")
+    val ckpt = java.nio.file.Paths.get(StoreRoot.path(s, "ckpt", qn))
     try {
       val q = agg.writeStream
         .format("memory")
@@ -162,21 +164,14 @@ object RateIngest {
       // snapshot files for a few hundred ms after stop() returns —
       // a single walk-delete races it (measured:
       // DirectoryNotEmptyException on state/0/0). Retry the sweep;
-      // a residue after the last attempt is a stale /tmp dir, not a
-      // query failure.
+      // a residue after the last attempt is reaped with the session's
+      // [[StoreRoot]] root once this JVM exits, not a query failure.
       var attempt = 0
       var deleted = false
       while (!deleted && attempt < 5) {
         attempt += 1
         try {
-          if (java.nio.file.Files.exists(ckpt)) {
-            val walk = java.nio.file.Files.walk(ckpt)
-            try {
-              import scala.jdk.CollectionConverters._
-              walk.iterator().asScala.toSeq.reverse
-                .foreach(p => java.nio.file.Files.deleteIfExists(p))
-            } finally walk.close()
-          }
+          StoreRoot.rmTree(ckpt)
           deleted = true
         } catch {
           case _: java.io.IOException => Thread.sleep(200)

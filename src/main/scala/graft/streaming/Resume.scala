@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.Tables
+import graft.core.StoreRoot
 
 /** CHECKPOINT-RESUME streaming lifecycle, oracle-gated (VERDICT r4
   * item 8 — the one Structured Streaming lifecycle pattern not yet
@@ -58,26 +59,16 @@ import graft.Tables
   * repeated query measures the checkpoint-resume lifecycle itself,
   * not two fixture rewrites.
   *
-  * Workspace is keyed by the fixture path's md5 AND the Spark
-  * application id (ADVICE r5: two concurrent JVMs over one fixture —
-  * bench and verify — must not delete each other's live checkpoint);
-  * the per-run subtree is RESET at the start of each invocation (same
+  * The workspace is the session's [[graft.core.StoreRoot]] store for
+  * the fixture dir (two concurrent JVMs over one fixture — bench and
+  * verify — must not delete each other's live checkpoint); the
+  * per-run subtree is RESET at the start of each invocation (same
   * leak discipline as [[Stateful]]'s stream dir), and the sink stays
   * readable after return for Verify's parquet dump.
   */
 object Resume {
 
   private val HourUs = 3600L * 1000 * 1000
-
-  private def rmTree(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse
-          .foreach(f => Files.deleteIfExists(f))
-      } finally walk.close()
-    }
 
   /** Write `df` as a wave of parquet part files moved into `destDir`
     * under `prefix` (staging write + move — the file source consumes
@@ -122,16 +113,13 @@ object Resume {
   }
 
   def resumeTumbling(s: SparkSession, dir: String): DataFrame = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val base = Paths.get(
-      s"/tmp/graft_resume_${md}_${s.sparkContext.applicationId}")
+    val base = Paths.get(StoreRoot.path(s, "resume", dir))
     val fixtures = base.resolve("fixtures")
 
     // Both wave parquet sets are written ONCE per (session, dir);
     // every invocation after the first only copies them.
     graft.operators.Lineage.ensure(s, dir, "resume_waves") {
-      rmTree(fixtures); Files.createDirectories(fixtures)
+      StoreRoot.rmTree(fixtures); Files.createDirectories(fixtures)
       val staging = base.resolve("staging")
       val ev = Tables(s, dir, "events")
         .select(col("ts_ns"), col("event_type"),
@@ -145,11 +133,11 @@ object Resume {
         staging, fixtures, "wave1")
       writeWave(waved.filter(col("ts_ns") > col("mid_ns")).drop("mid_ns"),
         staging, fixtures, "wave2")
-      rmTree(staging)
+      StoreRoot.rmTree(staging)
     }
 
     val work = base.resolve("run")
-    rmTree(work)
+    StoreRoot.rmTree(work)
     val src = work.resolve("src"); Files.createDirectories(src)
     val ckpt = work.resolve("ckpt")
     val out = work.resolve("out")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
 import graft.{GraftSession, Tables}
+import graft.core.StoreRoot
 
 /** Buffered (not-yet-emittable) events for one user's open sessions. */
 case class SessBuf(evs: Seq[SessEv])
@@ -72,18 +73,13 @@ object Stateful {
     // The file source wants a DIRECTORY of files (its basePath); the
     // fixture is a bare file, so expose it through a dir with a
     // symlink — zero copy, and exactly the layout a real ingest
-    // directory has. The dir is KEYED ON the fixture path (not a
-    // fresh temp dir per call), so repeated bench/verify cycles reuse
-    // one symlink instead of leaking a /tmp dir per invocation. The
-    // key is the FULL md5 of the path (hashCode is 32-bit — two
-    // fixture paths could collide and silently stream each other's
-    // data), and an existing link is verified to point at `path`
-    // (recreated if not) so a stale or foreign link can never feed
-    // the wrong fixture to the gates.
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // directory has. The dir is the session's [[StoreRoot]] store
+    // keyed on the fixture path, so repeated runs in one session
+    // reuse one symlink, and an existing link is verified to point at
+    // `path` (recreated if not) so a stale link can never feed the
+    // wrong fixture to the gates.
     val streamDir = java.nio.file.Paths.get(
-      "/tmp/graft_events_stream_" + md)
+      StoreRoot.path(s, "events_stream", path))
     java.nio.file.Files.createDirectories(streamDir)
     val link = streamDir.resolve("events.parquet")
     val target = java.nio.file.Paths.get(path)
@@ -116,7 +112,7 @@ object Stateful {
     */
   private def runToCompletion(s: SparkSession, out: DataFrame): DataFrame = {
     val qn = "st_run_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Paths.get(s"/tmp/graft_ckpt_$qn")
+    val ckpt = java.nio.file.Paths.get(StoreRoot.path(s, "ckpt", qn))
     try {
       val q = out.writeStream
         .format("memory")
@@ -126,16 +122,7 @@ object Stateful {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally { // delete even when the query fails mid-stream
-      if (java.nio.file.Files.exists(ckpt)) {
-        val walk = java.nio.file.Files.walk(ckpt)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } finally walk.close()
-      }
-    }
+    } finally StoreRoot.rmTree(ckpt) // even when the query fails mid-stream
     val result = s.table(qn) // eager analysis: plan no longer needs the view
     s.catalog.dropTempView(qn)
     result

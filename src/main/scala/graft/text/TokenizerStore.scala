@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.StoreRoot
+
 /** PERSISTED TOKENIZER ARTIFACT — the "train once, ship the
   * tokenizer" lifecycle every production pipeline runs (the
   * tokenizer.json shape): training happens once on a corpus
@@ -196,21 +198,10 @@ object TokenizerStore {
   // aggregate, |batch| work with the full-vocabulary-hit fast path
   // skipping the replay loop entirely.
 
-  /** Gate-harness scratch path (per dataset, process and session —
-    * the [[graft.sim.VectorIndex]] gatePath discipline; production
-    * callers pass their own path to [[saveBytes]]).
-    */
-  private def gatePath(s: SparkSession, dir: String,
-      family: String = "tok_store"): String = {
-    graft.operators.GateSweep.sweepStale()
-    s"/tmp/graft_${family}_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-      s"_${ProcessHandle.current().pid()}_${System.identityHashCode(s)}"
-  }
-
+  // The declared row's store lives in the session's [[StoreRoot]];
+  // production callers pass their own path to [[saveBytes]].
   def storeEncode(s: SparkSession, dir: String): DataFrame = {
-    val path = gatePath(s, dir)
+    val path = StoreRoot.path(s, "tok_store", dir)
     graft.operators.Lineage.ensure(s, dir, "ta_tok_store_bytes") {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -230,7 +221,7 @@ object TokenizerStore {
   // miss), structurally zero here because the batch is the training
   // corpus and the fixture has no oversized words.
   def uniStoreEncode(s: SparkSession, dir: String): DataFrame = {
-    val path = gatePath(s, dir, "uni_store")
+    val path = StoreRoot.path(s, "uni_store", dir)
     graft.operators.Lineage.ensure(s, dir, "ta_tok_store_uni") {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)

@@ -90,6 +90,24 @@ class DriftGuardSpec extends AnyFunSuite {
       s"object-level frame collections outside Lineage: $offenders")
   }
 
+  test("only StoreRoot names a local store path") {
+    // Store paths are StoreRoot.path's one decision: a `/tmp` literal,
+    // a pid, or an md5 of the fixture dir elsewhere is a private copy
+    // of it that the sweep does not know. Warehouse's md5 of `dir`
+    // names catalog tables, not a path.
+    val local = "\"/tmp|ProcessHandle\\.current".r
+    val md5OfDir = "getInstance\\(\"MD5\"\\)\\s*\\.digest\\((dir|path)\\b".r
+    val offenders = mainSources("StoreRoot.scala").flatMap { p =>
+      val src = new String(Files.readAllBytes(p), "UTF-8")
+      val md5s =
+        if (p.getFileName.toString == "Warehouse.scala") Iterator.empty
+        else md5OfDir.findAllMatchIn(src)
+      (local.findAllMatchIn(src) ++ md5s).map(m =>
+        s"$p:${src.take(m.start).count(_ == '\n') + 1}: ${m.matched}")
+    }
+    assert(offenders.isEmpty, s"store paths built outside StoreRoot: $offenders")
+  }
+
   test("README test/suite counts match the test tree") {
     val files = Files.walk(Paths.get("src/test/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq

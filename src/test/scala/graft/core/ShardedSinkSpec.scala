@@ -17,10 +17,7 @@ class ShardedSinkSpec extends SparkSpec {
     val res = ShardedSinkGate.shardedSink(spark, sf)
     assert(res.count() > 0)
 
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(sf.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val out =
-      s"/tmp/graft_sharded_${md}_${spark.sparkContext.applicationId}/out"
+    val out = StoreRoot.path(spark, "sharded", sf) + "/out"
     val shards = spark.sparkContext.wholeTextFiles(s"$out/part-*")
       .map { case (file, content) =>
         val id = "part-(\\d+)".r.findFirstMatchIn(file).get.group(1).toLong

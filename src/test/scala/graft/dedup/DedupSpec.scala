@@ -4,10 +4,10 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Tables, TempDirs}
 import graft.functions.TextHash
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with TempDirs {
   private val P = TextHash.Prime
 
   private def h60(w: String): Long = {
@@ -144,8 +144,7 @@ class DedupSpec extends SparkSpec {
     val docs = Seq(
       (0L, s"$run x9 $run"),                       // within-doc repeat
       (1L, "p1 q2 r3 s4 t5 u6 v7 w8 y9 z0 aa bb")) // no repeats
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_span_within").toString
+    val dir = tempDir("graft_span_within").toString
     import spark.implicits._
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
@@ -197,7 +196,7 @@ class DedupSpec extends SparkSpec {
 
   test("containment catches a truncation dup that Jaccard misses") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_contain").toString
+    val dir = tempDir("graft_contain").toString
     val tokensB = (0 until 50).map(i => s"tok$i")
     // doc 1 = the first 30% of doc 2 (a truncated crawl of it);
     // doc 3 unrelated. C(1→2) = 1.0 but J(1,2) = 13/48 ≈ 0.27.
@@ -289,7 +288,7 @@ class DedupSpec extends SparkSpec {
     // parquet signature store; a day's batch joins against store ∪
     // its own keys without touching historical text. Round-trip the
     // store through disk and reproduce the same pair set.
-    val dir = java.nio.file.Files.createTempDirectory("sigstore").toString
+    val dir = tempDir("sigstore").toString
     val sh = Tables(spark, sf, "documents")
       .filter(size(TextHash.tokens(col("text"))) >= 3)
       .select(col("doc_id"), TextHash.tokenHashes(

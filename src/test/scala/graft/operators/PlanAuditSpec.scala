@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Tables, TempDirs}
 
 /** Physical-plan audits: correctness is the oracle gate's job; this
   * suite pins the *plan shapes* that make the same queries viable at
@@ -12,7 +12,7 @@ import graft.{SparkSpec, Tables}
   * map-side partial aggregation. A regression here means a silent
   * 10–100× cost at scale long before any test fails on 60k rows.
   */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with TempDirs {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString()
@@ -55,8 +55,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("hive-style partitioned layout prunes partitions at the scan") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val ev = Tables(spark, sf, "events")
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     ev.write.mode("overwrite").partitionBy("day").parquet(dir)
@@ -77,8 +76,7 @@ class PlanAuditSpec extends SparkSpec {
     // at 100 TB each query reads NProbe/C of the corpus, not all of it.
     import graft.sim.VectorSearch
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf").toString
     VectorSearch.ivfAssign(spark, sf)
       .write.mode("overwrite").partitionBy("cid").parquet(dir)
     val index = spark.read.parquet(dir)

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** The persisted IVFPQ artifact's lifecycle contracts (VERDICT r6
   * item 3): an append encodes ONLY the new batch against the STORED
@@ -16,7 +16,7 @@ import graft.SparkSpec
   * same quantizers. The search result over the appended store is
   * additionally hash-gated against DuckDB (ss_ivfpq_incr).
   */
-class VectorIndexSpec extends SparkSpec {
+class VectorIndexSpec extends SparkSpec with TempDirs {
 
   private def files(root: Path): Map[String, Long] = {
     val walk = Files.walk(root)
@@ -29,7 +29,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("append is append-only, batch-sized, and equals a full " +
       "re-encode under the stored quantizers") {
-    val root = Files.createTempDirectory("graft_vindex")
+    val root = tempDir("graft_vindex")
     val path = root.toString
     val e = VectorSearch.vecs(spark, sf).localCheckpoint()
     val base = e.filter(col("vec_id") < 400)
@@ -111,7 +111,7 @@ class VectorIndexSpec extends SparkSpec {
 
   test("compact rewrites only bloated cid partitions, preserves " +
       "content and search results, and is idempotent") {
-    val root = Files.createTempDirectory("graft_vindex_c")
+    val root = tempDir("graft_vindex_c")
     val path = root.toString
     val e = VectorSearch.vecs(spark, sf).localCheckpoint()
     VectorIndex.build(e.filter(col("vec_id") < 350), path)

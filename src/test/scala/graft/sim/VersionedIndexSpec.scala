@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** The versioned index's contracts the SQL oracle cannot express
   * (the oracle gate `ss_version_search` proves the NEWEST snapshot
@@ -23,10 +23,10 @@ import graft.SparkSpec
   *    versions/pubs and the surviving snapshot still answers
   *    identically.
   */
-class VersionedIndexSpec extends SparkSpec {
+class VersionedIndexSpec extends SparkSpec with TempDirs {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_vtest").toString
+    tempDir("graft_vtest").toString
 
   private def split(): (DataFrame, DataFrame, DataFrame) = {
     val e = VectorSearch.vecs(spark, sf).localCheckpoint()

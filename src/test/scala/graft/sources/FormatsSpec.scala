@@ -4,10 +4,10 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Tables, TempDirs}
 import graft.core.TextSink
 
-class FormatsSpec extends SparkSpec {
+class FormatsSpec extends SparkSpec with TempDirs {
 
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq.map(String.valueOf): Seq[Any]).toSeq
@@ -21,7 +21,7 @@ class FormatsSpec extends SparkSpec {
     .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
 
   test("csv round-trip preserves schema and values") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     Formats.writeCsv(orders, dir)
     val back = Formats.readCsv(spark, dir, Ddl)
     assert(back.schema === orders.schema)
@@ -29,7 +29,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("json round-trip preserves schema and values") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json").toString
     Formats.writeJson(orders, dir)
     val back = Formats.readJson(spark, dir, Ddl)
     assert(back.schema === orders.schema)
@@ -37,13 +37,13 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("parquet round-trip is exact") {
-    val dir = Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq").toString
     Formats.writeParquet(orders, dir)
     assert(canon(Formats.readParquet(spark, dir)) === canon(orders))
   }
 
   test("orc round-trip is exact and pushes filters to the scan") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc").toString
     Formats.writeOrc(orders, dir)
     val back = Formats.readOrc(spark, dir)
     assert(back.schema === orders.schema)
@@ -58,7 +58,7 @@ class FormatsSpec extends SparkSpec {
 
   test("mergeSchema read unions evolved file schemas; pre-evolution " +
       "files surface the new column as null") {
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = tempDir("graft_evolve").toString
     val v1 = orders.select("o_orderkey", "o_custkey")
     v1.write.mode("append").parquet(dir)
     v1.withColumn("priority_class", lit("std"))
@@ -73,7 +73,7 @@ class FormatsSpec extends SparkSpec {
 
   test("PERMISSIVE json ingest quarantines malformed lines instead of " +
       "failing or dropping them") {
-    val dir = Files.createTempDirectory("graft_quarantine")
+    val dir = tempDir("graft_quarantine")
     val f = dir.resolve("landing.json")
     Files.write(f, java.util.Arrays.asList(
       """{"id": 1, "v": 10.5}""",
@@ -94,8 +94,8 @@ class FormatsSpec extends SparkSpec {
 
   test("compaction rewrites many small files into few range-clustered " +
       "ones with identical data and disjoint per-file key ranges") {
-    val small = Files.createTempDirectory("graft_small").toString
-    val compacted = Files.createTempDirectory("graft_compacted").toString
+    val small = tempDir("graft_small").toString
+    val compacted = tempDir("graft_compacted").toString
     orders.repartition(64).write.mode("overwrite").parquet(small)
     val nSmall = new java.io.File(small).listFiles()
       .count(_.getName.endsWith(".parquet"))
@@ -120,7 +120,7 @@ class FormatsSpec extends SparkSpec {
 
   test("TextSink sharded mode keeps global order across part files") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sharded").toString
+    val dir = tempDir("graft_sharded").toString
     val sorted = Tables(spark, sf, "documents")
       .select(col("doc_id")).as[Long].orderBy(col("doc_id"))
     TextSink.write[Long](sorted, _.toString, dir, single = false)

@@ -1,12 +1,10 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Tables, TempDirs}
 
 /** Data-layout gates: the two scan-reduction mechanisms a 100 TB
   * table lives or dies by, proven on real written files —
@@ -26,7 +24,7 @@ import graft.{SparkSpec, Tables}
   * half of the engine's scale story (the scan half — pushdown and
   * column pruning — is PlanAuditSpec's).
   */
-class LayoutSpec extends SparkSpec {
+class LayoutSpec extends SparkSpec with TempDirs {
 
   /** The single FileSourceScanExec of a materialized query. */
   private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec = {
@@ -40,7 +38,7 @@ class LayoutSpec extends SparkSpec {
 
   test("partitionBy layout: a partition-key filter prunes directories " +
       "(scans only the matching partition's files)") {
-    val dir = Files.createTempDirectory("graft_layout_part").toString
+    val dir = tempDir("graft_layout_part").toString
     Tables(spark, sf, "documents")
       .write.mode("overwrite").partitionBy("lang").parquet(dir)
 
@@ -67,7 +65,7 @@ class LayoutSpec extends SparkSpec {
 
   test("dynamic partition overwrite restates ONE partition; every " +
       "other partition's files are physically untouched") {
-    val dir = Files.createTempDirectory("graft_layout_backfill").toString
+    val dir = tempDir("graft_layout_backfill").toString
     val docs = Tables(spark, sf, "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
     val otherBefore = spark.read.parquet(dir)
@@ -106,8 +104,8 @@ class LayoutSpec extends SparkSpec {
     val savedBlock = Option(hc.get("parquet.block.size"))
     try {
       hc.setLong("parquet.block.size", 64 * 1024)
-      val sorted = Files.createTempDirectory("graft_layout_sorted").toString
-      val unsorted = Files.createTempDirectory("graft_layout_unsorted").toString
+      val sorted = tempDir("graft_layout_sorted").toString
+      val unsorted = tempDir("graft_layout_unsorted").toString
       val li = Tables(spark, "/root/testdata/sf0.01", "lineitem")
         .select("l_orderkey", "l_partkey", "l_quantity")
       li.sort("l_orderkey").coalesce(1).write.mode("overwrite").parquet(sorted)

@@ -1,13 +1,11 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.operators.Warehouse
 
 /** q57's layout payoff, proven on written files: sorting by the
@@ -17,7 +15,7 @@ import graft.operators.Warehouse
   * clustering story — the mechanism behind every lakehouse OPTIMIZE
   * ZORDER BY.
   */
-class ZorderSpec extends SparkSpec {
+class ZorderSpec extends SparkSpec with TempDirs {
 
   private def scanOf(df: DataFrame): FileSourceScanExec = {
     df.collect()
@@ -34,8 +32,8 @@ class ZorderSpec extends SparkSpec {
     val savedBlock = Option(hc.get("parquet.block.size"))
     try {
       hc.setLong("parquet.block.size", 64 * 1024)
-      val z = Files.createTempDirectory("graft_zorder_z").toString
-      val single = Files.createTempDirectory("graft_zorder_s").toString
+      val z = tempDir("graft_zorder_z").toString
+      val single = tempDir("graft_zorder_s").toString
       // q57 IS the write order: its first output column is the key.
       val li = Warehouse.q57Zorder(spark, "/root/testdata/sf0.01")
       li.coalesce(1).write.mode("overwrite").parquet(z)

@@ -4,7 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
+import graft.core.StoreRoot
 
 /** Streaming-dedup lifecycle gates (VERDICT r7 item 3's "Done"
   * condition): replay converges with no duplicate pairs, pre-publish
@@ -14,14 +15,7 @@ import graft.SparkSpec
   * the same waves — which the fixture makes non-vacuous in all three
   * pair classes (same-wave, cross-wave, wave-vs-store).
   */
-class DedupIngestSpec extends SparkSpec {
-
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
-  }
+class DedupIngestSpec extends SparkSpec with TempDirs {
 
   private def pairRows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getAs[Long]("doc_a"),
@@ -30,7 +24,7 @@ class DedupIngestSpec extends SparkSpec {
 
   test("stream lifecycle: replay converges, pre-publish == " +
       "post-publish == batch twin; recovery appends only the delta") {
-    val root = Files.createTempDirectory("graft_dd_ingest")
+    val root = tempDir("graft_dd_ingest")
     val path = root.resolve("store").toString
     val docsAll = graft.Tables(spark, sf, "documents")
       .select("doc_id", "text").localCheckpoint()
@@ -75,7 +69,7 @@ class DedupIngestSpec extends SparkSpec {
 
     // Replay with a lost checkpoint: every batch re-lands into its
     // own partition; the pair set is unchanged.
-    rmTree(ckpt)
+    StoreRoot.rmTree(ckpt)
     DedupIngest.ingest(spark, path, stream, ckpt.toString)
     assert(pairRows(DedupIngest.pairsAll(spark, path)) === twin)
 
@@ -116,7 +110,7 @@ class DedupIngestSpec extends SparkSpec {
       "and every on-disk file, surviving pairs are untouched, the " +
       "store equals an independent no-history recompute, replay is " +
       "a no-op") {
-    val root = Files.createTempDirectory("graft_dd_forget")
+    val root = tempDir("graft_dd_forget")
     val path = root.resolve("store").toString
     val docsAll = graft.Tables(spark, sf, "documents")
       .select("doc_id", "text").localCheckpoint()
@@ -195,7 +189,7 @@ class DedupIngestSpec extends SparkSpec {
   test("a zero-pair batch still seals: publish enumerates batch ids " +
     "across ALL staging tables (ADVICE r8), not just staged_pairs") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_dd_zeropair")
+    val root = tempDir("graft_dd_zeropair")
     val path = root.resolve("store").toString
     // Store: one doc; batch: one UNIQUE doc — the verification finds
     // no pairs, so no staged_pairs/batch_id=0 partition is written.

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, Trigger}
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Tables, TempDirs}
 
 /** Streaming-only surfaces: watermarks + append finalization,
   * watermark-bounded dedup, custom state machines, and the file
@@ -22,7 +22,7 @@ import graft.{SparkSpec, Tables}
   * once via `spark.read`, once via `readStream` + AvailableNow — and
   * must produce identical rows.
   */
-class EventsStreamingSpec extends SparkSpec {
+class EventsStreamingSpec extends SparkSpec with TempDirs {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -325,8 +325,8 @@ class EventsStreamingSpec extends SparkSpec {
     //       new timer (12:30); E (13:31) stays open — never emitted.
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val dir = Files.createTempDirectory("graft_tws_kfile")
-    val ckpt = Files.createTempDirectory("graft_tws_kfile_ckpt")
+    val dir = tempDir("graft_tws_kfile")
+    val ckpt = tempDir("graft_tws_kfile_ckpt")
     val files = Seq(
       Seq((1L, ts("2026-01-01 10:00:00"), 1.00),
         (2L, ts("2026-01-01 10:05:00"), 2.00)),
@@ -336,7 +336,7 @@ class EventsStreamingSpec extends SparkSpec {
       Seq((2L, ts("2026-01-01 12:00:00"), 0.25),
         (5L, ts("2026-01-01 13:01:00"), 0.125)))
     files.zipWithIndex.foreach { case (rows, i) =>
-      val stage = Files.createTempDirectory(s"graft_tws_stage$i")
+      val stage = tempDir(s"graft_tws_stage$i")
       rows.toDF("user_id", "ts", "value").coalesce(1)
         .write.mode("overwrite").parquet(stage.toString)
       val part = Files.list(stage).iterator().asScala
@@ -394,7 +394,7 @@ class EventsStreamingSpec extends SparkSpec {
     // diffs the full 7k-row answer against the batch run. A
     // stream-static join holds NO join state — the static side is
     // hash-probed per micro-batch — so no watermark is needed.
-    val dir = Files.createTempDirectory("graft_enrich_stream")
+    val dir = tempDir("graft_enrich_stream")
     Files.createSymbolicLink(dir.resolve("events.parquet"),
       Paths.get(s"$sf/events.parquet"))
     val schema = spark.read.parquet(s"$sf/events.parquet").schema
@@ -422,7 +422,7 @@ class EventsStreamingSpec extends SparkSpec {
   test("foreachBatch sink lands micro-batches as parquet") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val out = Files.createTempDirectory("graft_feb").toString
+    val out = tempDir("graft_feb").toString
     val ms = MemoryStream[(Long, Double)]
     val q = ms.toDF().toDF("id", "v").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -445,7 +445,7 @@ class EventsStreamingSpec extends SparkSpec {
       "table unchanged where a plain append would duplicate it") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val out = Files.createTempDirectory("graft_feb_idem").toString + "/t"
+    val out = tempDir("graft_feb_idem").toString + "/t"
     val sink = Sinks.idempotentBatchSink(out)
     val ms = MemoryStream[(Long, Double)]
     val q = ms.toDF().toDF("id", "v").writeStream
@@ -556,7 +556,7 @@ class EventsStreamingSpec extends SparkSpec {
   }
 
   test("file-source stream computes the same tumbling agg as batch") {
-    val dir = Files.createTempDirectory("graft_stream_src")
+    val dir = tempDir("graft_stream_src")
     Files.copy(Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val raw = spark.read.parquet(dir.toString)

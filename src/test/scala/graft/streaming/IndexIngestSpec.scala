@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
+import graft.core.StoreRoot
 import graft.sim.{VectorIndex, VectorSearch}
 
 /** Streaming-ingest lifecycle of the persisted ANN index: staged
@@ -15,15 +14,7 @@ import graft.sim.{VectorIndex, VectorSearch}
   * `cid=` lists so the store converges to exactly the batch-append
   * ground truth.
   */
-class IndexIngestSpec extends SparkSpec {
-
-  private def rmTree(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-      finally walk.close()
-    }
+class IndexIngestSpec extends SparkSpec with TempDirs {
 
   private def listRows(df: org.apache.spark.sql.DataFrame) =
     df.select("vec_id", "codes", "cid")
@@ -38,7 +29,7 @@ class IndexIngestSpec extends SparkSpec {
 
   test("streamed batches stage idempotently, are searchable before " +
       "publish, and publish seals to the batch-append ground truth") {
-    val root = Files.createTempDirectory("graft_ingest")
+    val root = tempDir("graft_ingest")
     val path = root.resolve("index").toString
     val twin = root.resolve("twin").toString
     val e = VectorSearch.vecs(spark, sf).localCheckpoint()
@@ -92,7 +83,7 @@ class IndexIngestSpec extends SparkSpec {
     // Replay: a fresh run over the same source (checkpoint lost)
     // re-lands every batch into its own batch_id partition — row SET
     // unchanged, no duplicates.
-    rmTree(ckpt)
+    StoreRoot.rmTree(ckpt)
     IndexIngest.ingest(spark, path, stream, ckpt.toString)
     assert(listRows(spark.read.parquet(s"$path/staged")) ===
       listRows(twinAppended))
@@ -110,7 +101,7 @@ class IndexIngestSpec extends SparkSpec {
 
   test("publish recovers from a crash between append and staging " +
       "cleanup without duplicating the in-flight batch") {
-    val root = Files.createTempDirectory("graft_ingest_crash")
+    val root = tempDir("graft_ingest_crash")
     val path = root.resolve("index").toString
     val twin = root.resolve("twin").toString
     val e = VectorSearch.vecs(spark, sf).localCheckpoint()

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** The streaming corpus build's contracts the SQL oracle cannot
   * express, driven over a CRAFTED corpus through the public
@@ -24,7 +22,7 @@ import graft.SparkSpec
   *    a second publish appends nothing, and the read set is
   *    identical before and after sealing.
   */
-class PipeIngestSpec extends SparkSpec {
+class PipeIngestSpec extends SparkSpec with TempDirs {
 
   private def docsDf(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
@@ -64,7 +62,7 @@ class PipeIngestSpec extends SparkSpec {
   test("streamed pipeline: trained-gate drop, greedy dedup across " +
     "store/batch/earlier-batch, zero-OOV replay encode, " +
     "exactly-once publish") {
-    val path = Files.createTempDirectory("graft_pipe_spec").toString
+    val path = tempDir("graft_pipe_spec").toString
     PipeIngest.build(spark, docsDf(histRows), path)
 
     val src = s"$path/src"
@@ -137,7 +135,7 @@ class PipeIngestSpec extends SparkSpec {
     val bTxt = base.mkString(" ")
     val aTxt = (base.dropRight(1) :+ "rho").mkString(" ")    // last≠
     val cTxt = ("sigma" +: base.drop(1)).mkString(" ")       // first≠
-    val path = Files.createTempDirectory("graft_pipe_greedy").toString
+    val path = tempDir("graft_pipe_greedy").toString
     // History: unrelated keep + drop docs so the NB gate has both
     // classes and none of a/b/c matches the store.
     val hist = Seq(
@@ -218,7 +216,7 @@ class PipeIngestSpec extends SparkSpec {
     "decontam (a decontaminated doc still gates near-dups), scrub " +
     "before encode (history + cross-batch spans cut), emitted-only " +
     "span index, exactly-once publish with span sealing") {
-    val path = Files.createTempDirectory("graft_pipe_full").toString
+    val path = tempDir("graft_pipe_full").toString
     val benchText = "the history of ancient rome spans centuries " +
       "of conquest and culture"
     // 25: the benchmark text + a distinctive tail — passes quality
@@ -320,7 +318,7 @@ class PipeIngestSpec extends SparkSpec {
 
   test("compact crash recovery: an interrupted swap (marker present, " +
     "live tables stale) completes at the next compact entry") {
-    val path = Files.createTempDirectory("graft_pipe_cswap").toString
+    val path = tempDir("graft_pipe_cswap").toString
     PipeIngest.build(spark, docsDf(histRows), path)
     docsDf(Seq(22L -> doc22)).coalesce(1).write.mode("append")
       .parquet(s"$path/src")

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.StoreRoot
 
 /** Lifecycle gates for `st_resume_tumbling` that the DuckDB hash
   * cannot express: the emission really spans BOTH streaming runs
@@ -21,12 +22,10 @@ class ResumeSpec extends SparkSpec {
     // Re-open the sink WITH its batch_id partition column: batch ids
     // 0/1 belong to run 1 (data batch + no-data flush), >= 2 to the
     // resumed run — both sides must have emitted rows. The workspace
-    // is keyed by fixture-md5 AND application id (ADVICE r5), with
-    // the per-run subtree under run/.
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(sf.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // is the session's "resume" store, with the per-run subtree under
+    // run/.
     val out = spark.read.parquet(
-      s"/tmp/graft_resume_${md}_${spark.sparkContext.applicationId}/run/out")
+      StoreRoot.path(spark, "resume", sf) + "/run/out")
     assert(out.count() === resCount)
 
     val dup = out.groupBy("window_start", "event_type")

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** BPE training gated against an INDEPENDENT sequential
   * implementation (VERDICT r6 item 1's "Done" condition): classic
@@ -11,7 +11,7 @@ import graft.SparkSpec
   * counting (overlap handling), greedy merge order (the "AAAA" case)
   * or tie-breaking shows up as a different merge table.
   */
-class BpeTrainerSpec extends SparkSpec {
+class BpeTrainerSpec extends SparkSpec with TempDirs {
 
   /** Sequential reference: the textbook algorithm, no Spark. */
   private def sequentialBpe(wordFreq: Map[String, Long],
@@ -182,8 +182,7 @@ class BpeTrainerSpec extends SparkSpec {
       Seq(Seq("AAAA", "AAA"), Seq("ABABAB")) ++ // overlap-rule edges
         (1 to 4).map(_ => (1 to (4 + rng.nextInt(12))).map(_ => randWord()))
     corpora.zipWithIndex.foreach { case (words, i) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"bpe_prop_$i").toString
+      val dir = tempDir(s"bpe_prop_$i").toString
       words.grouped(3).zipWithIndex
         .map { case (ws, d) => (d.toLong, ws.mkString(" ")) }
         .toSeq.toDF("doc_id", "text")
@@ -208,7 +207,7 @@ class BpeTrainerSpec extends SparkSpec {
     val tiny = Seq("A B C", "B C A").toDF("text")
       .withColumn("doc_id", monotonically_increasing_id())
     // exercised through the private loop via a scratch dir round-trip
-    val dir = java.nio.file.Files.createTempDirectory("bpe_tiny").toString
+    val dir = tempDir("bpe_tiny").toString
     tiny.select("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val m = BpeTrainer.bpeTrain(spark, dir)

@@ -4,7 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
+import graft.core.StoreRoot
 
 /** Byte-level BPE gated three ways (VERDICT r7 item 1's "Done"
   * condition): the distributed merge table ≡ an independent
@@ -15,7 +16,7 @@ import graft.SparkSpec
   * and astral-plane codepoints — with zero OOV, piece-for-piece equal
   * to a sequential replay of the stored merges.
   */
-class ByteBpeSpec extends SparkSpec {
+class ByteBpeSpec extends SparkSpec with TempDirs {
 
   /** Pretoken → hex-pair symbol seed (the byte alphabet). */
   private def hexSyms(t: String): Vector[String] =
@@ -159,8 +160,7 @@ class ByteBpeSpec extends SparkSpec {
 
   test("stored byte tokenizer: zero OOV on a batch the training " +
     "corpus never saw; pieces == sequential replay of stored merges") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("bytetok").toString
+    val dir = tempDir("bytetok").toString
     TokenizerStore.saveBytes(spark, sf, dir)
 
     val texts = Seq(
@@ -197,8 +197,7 @@ class ByteBpeSpec extends SparkSpec {
 
   test("segmentBytes: unseen pretokens segment piece-for-piece like " +
     "the sequential replay, in position order") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("bytetok2").toString
+    val dir = tempDir("bytetok2").toString
     TokenizerStore.saveBytes(spark, sf, dir)
     val merges = TokenizerStore
       .loadBytesMerges(spark, dir).collect()
@@ -283,12 +282,9 @@ class ByteBpeSpec extends SparkSpec {
     val first = TokenizerStore.storeEncode(spark, sf)
       .collect().map(_.toSeq).toSeq
 
-    // The on-disk artifact this session built (gate path is internal;
-    // find it by the family prefix + our own pid).
-    val pid = ProcessHandle.current().pid()
-    val stores = new java.io.File("/tmp").listFiles()
-      .filter(f => f.getName.startsWith("graft_tok_store_") &&
-        f.getName.contains(s"_${pid}_"))
+    // The on-disk artifact this session built.
+    val stores = Array(new java.io.File(StoreRoot.path(spark, "tok_store", sf)))
+      .filter(_.exists)
     assert(stores.nonEmpty, "declared row left no store on disk")
     def listing = stores.flatMap { st =>
       java.nio.file.Files.walk(st.toPath).iterator().asScala

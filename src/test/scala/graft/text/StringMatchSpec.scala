@@ -2,12 +2,12 @@ package graft.text
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Golden tests for the reference string_match (grep) intended
   * semantics (FIXTURES.md §2.2).
   */
-class StringMatchSpec extends SparkSpec {
+class StringMatchSpec extends SparkSpec with TempDirs {
 
   test("relational form: case-insensitive contains, sorted by line") {
     import spark.implicits._
@@ -24,7 +24,7 @@ class StringMatchSpec extends SparkSpec {
 
   test("runTextFile: lineNo:line output, first/last line, absent pattern") {
     import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("sm")
+    val tmp = tempDir("sm")
     val in = tmp.resolve("in.txt")
     Files.write(in,
       "english tea\nno match\nlate ENGLISH match".getBytes("UTF-8"))

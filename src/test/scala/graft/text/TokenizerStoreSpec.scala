@@ -1,21 +1,19 @@
 package graft.text
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** The persisted-tokenizer lifecycle: a store round-trip reproduces
   * the session-trained encode exactly, a new batch encodes against
   * the stored tables alone, and out-of-vocabulary words surface as a
   * census instead of silently vanishing.
   */
-class TokenizerStoreSpec extends SparkSpec {
+class TokenizerStoreSpec extends SparkSpec with TempDirs {
 
   test("store round-trip: stored-tokenizer encode == session-trained " +
       "encode on the training corpus; merge table survives verbatim") {
-    val path = Files.createTempDirectory("graft_tok_store").toString
+    val path = tempDir("graft_tok_store").toString
     TokenizerStore.save(spark, sf, path)
 
     val viaStore = TokenizerStore
@@ -43,7 +41,7 @@ class TokenizerStoreSpec extends SparkSpec {
   test("a later batch encodes against the stored tables alone, with " +
       "OOV words counted, not dropped") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_tok_store2").toString
+    val path = tempDir("graft_tok_store2").toString
     TokenizerStore.save(spark, sf, path)
     // In-vocabulary text plus a word the fixture corpus cannot
     // contain (QQQQZZZZ) and an empty doc.
@@ -69,7 +67,7 @@ class TokenizerStoreSpec extends SparkSpec {
       "stored-tokenizer encode == session-trained per-word counts, " +
       "oversized and unseen words surface as OOV (VERDICT r9 item 6)") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_uni_store").toString
+    val path = tempDir("graft_uni_store").toString
     TokenizerStore.saveUnigram(spark, sf, path)
 
     // Census round-trips verbatim.

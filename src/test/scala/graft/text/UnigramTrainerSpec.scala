@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Unigram-LM training gated against an INDEPENDENT sequential
   * implementation: a classic per-word left-to-right Viterbi DP (the
@@ -13,7 +13,7 @@ import graft.SparkSpec
   * usage-pruning step between EM rounds shows up as a different
   * vocabulary census or a different per-word path.
   */
-class UnigramTrainerSpec extends SparkSpec {
+class UnigramTrainerSpec extends SparkSpec with TempDirs {
 
   private val MaxP = UnigramTrainer.MaxPieceLen
 
@@ -188,8 +188,7 @@ class UnigramTrainerSpec extends SparkSpec {
       Seq(Seq("A"), Seq("ABAB", "ABAB", "ABAB")) ++ // degenerate edges
         (1 to 4).map(_ => (1 to (4 + rng.nextInt(12))).map(_ => randWord()))
     corpora.zipWithIndex.foreach { case (words, i) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"uni_prop_$i").toString
+      val dir = tempDir(s"uni_prop_$i").toString
       words.grouped(3).zipWithIndex
         .map { case (ws, d) => (d.toLong, ws.mkString(" ")) }
         .toSeq.toDF("doc_id", "text")
@@ -213,7 +212,7 @@ class UnigramTrainerSpec extends SparkSpec {
     import spark.implicits._
     val long = "A" * (UnigramTrainer.MaxWordLen + 1)
     val tiny = Seq((0L, s"$long BB CC"), (1L, "BB BB")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("uni_tiny").toString
+    val dir = tempDir("uni_tiny").toString
     tiny.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val vocab = UnigramTrainer.unigramTrain(spark, dir).collect()
       .map(r => r.getAs[String]("piece")).toSet

@@ -2,13 +2,13 @@ package graft.text
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Golden tests for the reference wordcount semantics
   * (FIXTURES.md §2.1): tokenizer char classes, apostrophe rule, case
   * folding, count-desc ordering with deterministic ties.
   */
-class WordCountSpec extends SparkSpec {
+class WordCountSpec extends SparkSpec with TempDirs {
 
   test("RefTokenizer: intended reference semantics") {
     assert(RefTokenizer.tokenize("don't stop").toList ==
@@ -82,7 +82,7 @@ class WordCountSpec extends SparkSpec {
 
   test("DataFrame form ≡ typed MapReduce pipeline form") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("wc").toFile
+    val tmp = tempDir("wc").toFile
     val in = new java.io.File(tmp, "in.txt").getAbsolutePath
     Files.write(java.nio.file.Paths.get(in),
       "The quick brown fox\nthe lazy dog; THE end.\ndon't stop 'tis\n"
@@ -95,7 +95,7 @@ class WordCountSpec extends SparkSpec {
 
   test("runTextFile writes one sorted word\\tcount file") {
     import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("wcout")
+    val tmp = tempDir("wcout")
     val in = tmp.resolve("in.txt")
     Files.write(in, "b b b a a c\n".getBytes("UTF-8"))
     val out = tmp.resolve("out").toString
