@@ -16,13 +16,23 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    // A failed query also lands in failures.txt (one `name<TAB>message`
+    // line each; empty when nothing failed), so a dump names its own
+    // gaps instead of leaving them to a grep of stderr.
+    val failures = SparkEntry.queries.filter(e => keep(e._1)).toSeq
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          val msg = String.valueOf(e.getMessage).replaceAll("\\s+", " ")
+          Some(s"$name\t$msg\n")
+        }
       }
-    }
+    Files.writeString(Paths.get(s"$outDir/failures.txt"),
+      failures.mkString)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

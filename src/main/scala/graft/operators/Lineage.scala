@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -104,43 +106,55 @@ object Lineage {
         materialized(s, dir, k, level)(b())
         ()
       } else if (missing.nonEmpty) {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        import scala.util.{Failure, Success, Try}
-        // ADVICE r12: each build is wrapped in Try so EVERY future
-        // settles before Await returns — a bare Future.sequence
-        // rethrows on the first failure while sibling builds keep
-        // running detached, their persist()-registered frames neither
-        // cached nor unpersisted (pinned CacheManager leaks, work
-        // silently redone on retry). Survivors are registered (or
-        // unpersisted if a racing caller won), THEN the first failure
-        // is rethrown. Builds are blocking Spark actions, so they run
-        // on a dedicated ad-hoc pool, not the global fork-join EC
-        // (which other library code may share and which a blocked
-        // Spark action would starve); the pool is torn down on exit.
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(missing.size)
-        val ec = ExecutionContext.fromExecutorService(pool)
-        val settled: Seq[(String, Try[DataFrame])] =
-          try Await.result(
-            Future.sequence(missing.map { case (k, b) =>
-              Future {
-                k -> Try(timed((s, dir, k))(b().persist(level)))
-              }(ec)
-            })(implicitly, ec), Duration.Inf)
-          finally ec.shutdown()
+        // Survivors are registered (or unpersisted if a racing caller
+        // won), THEN the first failure is rethrown — [[settle]] has
+        // let every sibling build finish, so none is left running
+        // detached with a persist()-registered frame neither cached
+        // nor unpersisted.
+        val settled = settle(missing.map { case (k, b) =>
+          () => timed((s, dir, k))(b().persist(level)) })
         cache.synchronized {
-          settled.foreach {
+          missing.map(_._1).zip(settled).foreach {
             case (k, Success(df)) =>
               if (cache.contains((s, dir, k))) df.unpersist()
               else cache.update((s, dir, k), df)
             case (_, Failure(_)) => ()
           }
         }
-        settled.collectFirst { case (_, Failure(e)) => e }
-          .foreach(throw _)
+        settled.collectFirst { case Failure(e) => e }.foreach(throw _)
       }
     }
+
+  /** Run `thunks` concurrently, one dedicated thread each, and return
+    * only once EVERY thunk has settled and its thread has exited —
+    * results in input order. The one concurrency discipline for the
+    * engine's blocking Spark work (ADVICE r12): a bare `Future`
+    * sequence rethrows on the first failure while its siblings keep
+    * running detached, and the global fork-join pool, which other
+    * library code shares, is starved by a blocked Spark action. Fresh
+    * threads also inherit the caller's Spark local properties (job
+    * group, scheduler pool) at creation, never a stale pool thread's.
+    */
+  private[graft] def settle[T](thunks: Seq[() => T]): Seq[Try[T]] = {
+    val out = new Array[Try[T]](thunks.size)
+    val threads = thunks.zipWithIndex.map { case (f, i) =>
+      new Thread(() => out(i) =
+        try Success(f()) catch { case e: Throwable => Failure(e) },
+        s"graft-settle-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    out.toSeq
+  }
+
+  /** [[settle]], then the values — or the first failure, rethrown
+    * after every sibling has finished.
+    */
+  private[graft] def all[T](thunks: Seq[() => T]): Seq[T] = {
+    val settled = settle(thunks)
+    settled.collectFirst { case Failure(e) => e }.foreach(throw _)
+    settled.map(_.get)
+  }
 
   /** The frame built by `build`, persisted on first use and shared by
     * every later caller with the same (session, dir, key).

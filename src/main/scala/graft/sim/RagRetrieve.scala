@@ -485,14 +485,14 @@ object RagRetrieve {
   // -----------------------------------------------------------------
   // ss_rag_index (VERDICT r10 item 5): RAG served from the PERSISTED
   // index — the chunk-embed corpus composed into the
-  // [[VectorIndex]] artifact lifecycle (build on the base slice,
-  // append the suffix batch — the ss_ivfpq_incr discipline) and the
-  // held-out queries probed through [[VectorIndex.search]] (IVFADC
-  // over the stored Hive layout, DPP-pruned to NProbe cid
-  // directories, exact rerank). This gates the persisted/versioned
-  // index tier on the workload it exists for: the production serving
-  // shape is a probe against the stored artifact, not a per-session
-  // band sketch.
+  // [[VersionedIndex]] lifecycle (v1 = build on the base slice, v2 =
+  // append the suffix batch — the ss_ivfpq_incr chain) and the
+  // held-out queries probed through [[VersionedIndex.search]] (IVFADC
+  // over the newest committed snapshot, DPP-pruned to NProbe cid
+  // directories, exact rerank). This gates the persisted index tier
+  // on the workload it exists for: the production serving shape is a
+  // probe against the stored artifact, not a per-session band
+  // sketch.
   //
   // Id conventions (cross-engine deterministic): corpus vec_id = the
   // (doc_id, chunk_idx)-ordered dense rank (a slim-key global
@@ -501,7 +501,7 @@ object RagRetrieve {
   // are held out of the corpus by the eval split already).
   //
   // 100 TB shape: everything downstream of the embed pass is the
-  // gated VectorIndex machinery (broadcast quantizers, |batch|-cost
+  // gated VersionedIndex machinery (broadcast quantizers, |batch|-cost
   // append, DPP probe); the dense-rank window shuffles only
   // (doc_id, chunk_idx) key pairs.
 
@@ -542,16 +542,10 @@ object RagRetrieve {
       .withColumn("qn", l2norm(col("qv")))
       .localCheckpoint()
     graft.operators.Lineage.ensure(s, dir, "ss_rag_index_store") {
-      val et = VectorIndex.phase("rag: threshold ckpt") {
-        VectorIndex.withThreshold(
-          corpV.select("vec_id", "v", "nrm")).localCheckpoint()
-      }
-      VectorIndex.build(
-        et.filter(col("vec_id") < col("thr")).drop("thr"), path)
-      VectorIndex.append(s, path,
-        et.filter(col("vec_id") >= col("thr")).drop("thr"))
+      VersionedIndex.publishBaseAndIncrement(s, path,
+        corpV.select("vec_id", "v", "nrm"), "rag")
     }
-    VectorIndex.search(s, path, qV, corpV.select("vec_id", "v", "nrm"))
+    VersionedIndex.search(s, path, qV, corpV.select("vec_id", "v", "nrm"))
       .join(corpV.select(col("vec_id").as("neighbor_id"),
         col("doc_id"), col("chunk_idx")), "neighbor_id")
       .select((col("query_id") - QOff).as("q_doc_id"), col("rank"),

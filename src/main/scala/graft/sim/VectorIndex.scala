@@ -6,42 +6,33 @@ import org.apache.spark.sql.functions._
 
 import graft.core.StoreRoot
 
-/** PERSISTED IVFPQ INDEX with incremental add (VERDICT r6 item 3).
+/** IVFPQ ENCODE + SEARCH over stored tables, and the declared
+  * persisted-index gate (VERDICT r6 item 3).
   *
   * The session-cached Lineage frames are the wrong LIFETIME for a
   * production ANN index: FAISS persists `train()`'s quantizers and the
   * inverted lists as an on-disk artifact, and tomorrow's embedding
   * batch is `add()`ed by encoding against the STORED quantizers —
-  * never by retraining or re-encoding the historical corpus. This
-  * module is that artifact as a Spark-native layout:
-  *
-  * ```
-  * <path>/centroids/   parquet (cid, cv, cn)           — the IVF coarse quantizer
-  * <path>/codebooks/   parquet (m, code, cbv)          — the PQ codebooks
-  * <path>/lists/       parquet (vec_id, codes) PARTITIONED BY (cid)
-  * ```
-  *
-  * `lists/` is the FAISS inverted-list file re-expressed as a Hive
-  * layout: one directory per coarse cell holding PqM-byte code rows.
-  * [[build]] trains on the base slice and writes all three;
-  * [[append]] reads the two quantizer tables back, encodes ONLY the
-  * new batch, and appends rows to the affected `cid=` directories —
-  * parquet files are immutable, so the base data is provably
-  * untouched (VectorIndexSpec asserts the file set only grows).
-  * [[search]] is the IVFADC query over the stored tables; probing
-  * joins on the partition column, so at scale a probe is directory
-  * pruning exactly as the Lineage-cached [[VectorSearch.ivfPqTopK]]
-  * promises.
+  * never by retraining or re-encoding the historical corpus. The
+  * on-disk artifact is a [[VersionedIndex]] root (immutable `pub=`
+  * data + committed manifests); this module holds the two operators
+  * every store shares: [[encode]] (a batch against given quantizers)
+  * and [[searchFrames]] (IVFADC over given quantizer and list frames;
+  * probing joins on the `cid` partition column, so at scale a probe
+  * is directory pruning exactly as the Lineage-cached
+  * [[VectorSearch.ivfPqTopK]] promises).
   *
   * The declared gate `ss_ivfpq_incr` runs the full lifecycle: base =
   * the first ⌊0.9·N⌋ vec_ids (today's corpus), increment = the
   * suffix batch (tomorrow's ingest — new ids, the natural shape for
-  * an append-only embedding store), quantizers trained ON BASE ONLY.
-  * The DuckDB oracle recomputes base-trained quantizers, encodes the
-  * FULL corpus with them and searches — exactly the store ∪ increment
-  * contents — so the hash gate proves append ≡ full-rebuild-encode
-  * under fixed quantizers (the [[graft.dedup.Dedup.incremental]]
-  * equivalence, applied to the ANN index).
+  * an append-only embedding store), quantizers trained ON BASE ONLY
+  * ([[VersionedIndex.publishBuild]] = v1,
+  * [[VersionedIndex.publishAppend]] = v2). The DuckDB oracle
+  * recomputes base-trained quantizers, encodes the FULL corpus with
+  * them and searches — exactly the store ∪ increment contents — so
+  * the hash gate proves append ≡ full-rebuild-encode under fixed
+  * quantizers (the [[graft.dedup.Dedup.incremental]] equivalence,
+  * applied to the ANN index).
   */
 object VectorIndex {
 
@@ -49,45 +40,6 @@ object VectorIndex {
 
   /** Base fraction for the declared gate: vec_id < ⌊0.9·N⌋. */
   val BaseFrac = 0.9
-
-  private[graft] def lists(path: String) = s"$path/lists"
-  private[graft] def centPath(path: String) = s"$path/centroids"
-  private[graft] def cbPath(path: String) = s"$path/codebooks"
-
-  /** [[graft.operators.PhaseLog.phase]], kept under its historical
-    * name for the sim tier's call sites.
-    */
-  private[sim] def phase[T](tag: String)(f: => T): T =
-    graft.operators.PhaseLog.phase(tag)(f)
-
-  /** Train quantizers on `base` and write the full artifact (the
-    * base corpus encoded). Overwrites any previous index at `path`.
-    */
-  def build(base: DataFrame, path: String): Unit = {
-    // The two trainers are independent fixed-round chains of small
-    // sequential jobs; training them CONCURRENTLY (round 12) lets the
-    // local scheduler interleave their per-round jobs, so the build's
-    // wall is ~max of the two instead of their sum. Each chain is
-    // internally eager (localCheckpoint per round), so the futures do
-    // real work, not plan construction.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fCent = Future { lloydCentroids(base) }
-    val fCb = Future { lloydCodebooks(base) }
-    val (cent, cb) = phase("train(cent||cb)") {
-      (Await.result(fCent, Duration.Inf),
-        Await.result(fCb, Duration.Inf))
-    }
-    phase("write quantizers") {
-      cent.write.mode("overwrite").parquet(centPath(path))
-      cb.write.mode("overwrite").parquet(cbPath(path))
-    }
-    phase("encode+write base") {
-      encode(base, cent, cb)
-        .write.mode("overwrite").partitionBy("cid").parquet(lists(path))
-    }
-  }
 
   /** Encode a batch against GIVEN quantizers → (vec_id, codes, cid).
     * One broadcast of each quantizer table into two narrow passes —
@@ -121,89 +73,13 @@ object VectorIndex {
     asg.join(codes, "vec_id").select("vec_id", "codes", "cid")
   }
 
-  /** Incremental add: encode `batch` with the STORED quantizers and
-    * append to the inverted lists. No retraining, no re-encoding of
-    * stored rows — append-mode parquet only adds files to the
-    * touched `cid=` directories.
-    */
-  def append(s: SparkSession, path: String, batch: DataFrame): Unit =
-    phase("encode+append batch") {
-      encode(batch,
-        s.read.parquet(centPath(path)), s.read.parquet(cbPath(path)))
-        .write.mode("append").partitionBy("cid").parquet(lists(path))
-    }
-
-  /** Index MAINTENANCE: compact inverted-list partitions whose
-    * parquet file count exceeds `maxFiles`. Every [[append]] adds at
-    * least one file to each touched `cid=` directory, so a
-    * long-lived index accumulates per-file open/footer overhead on
-    * exactly the partitions the probe join scans; compaction
-    * rewrites ONLY the bloated partitions (dynamic partition
-    * overwrite — the [[graft.sources.Formats.backfillPartitions]]
-    * discipline), leaving every other partition's files
-    * byte-for-byte untouched. The directory listing is driver-side
-    * METADATA (the same stat calls split planning performs), never
-    * data; the data path is one partition-pruned scan of the bloated
-    * cids, re-clustered one-task-per-cid. The read is
-    * localCheckpoint-materialized before the overwrite so the job
-    * never reads the files it is replacing. At 100 TB scale the
-    * `cids` argument bounds one run's memory: compact in cid batches
-    * rather than all-at-once.
-    *
-    * Returns the compacted cids (empty = nothing exceeded the
-    * threshold, store untouched — calling it again is a no-op).
-    */
-  def compact(s: SparkSession, path: String, maxFiles: Int = 4,
-      cids: Option[Seq[Long]] = None): Seq[Long] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val listsDir = new HPath(lists(path))
-    val fs = listsDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val bloated = fs.listStatus(listsDir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cid="))
-      .filter(st => fs.listStatus(st.getPath)
-        .count(_.getPath.getName.endsWith(".parquet")) > maxFiles)
-      .map(_.getPath.getName.stripPrefix("cid=").toLong)
-      .filter(c => cids.forall(_.contains(c)))
-      .sorted
-    if (bloated.nonEmpty) {
-      val sub = s.read.parquet(lists(path))
-        .withColumn("cid", col("cid").cast("long"))
-        .filter(col("cid").isin(bloated: _*)) // partition-pruned scan
-        .repartition(col("cid"))
-        .localCheckpoint()
-      sub.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid").parquet(lists(path))
-    }
-    bloated
-  }
-
-  /** IVFADC over the stored artifact for a (query_id, qv, qn) set;
-    * exact rerank against `corpus`. Same shape as
-    * [[VectorSearch.ivfPqTopK]] with every index input read from
-    * disk.
-    */
-  def search(s: SparkSession, path: String, q: DataFrame,
-      corpus: DataFrame): DataFrame =
-    // The Hive layout re-infers the partition column from directory
-    // names (cid=NN -> INT); restore the artifact's declared LONG.
-    searchLists(s, path,
-      s.read.parquet(lists(path)).withColumn("cid", col("cid").cast("long")),
-      q, corpus)
-
-  /** [[search]] with the inverted lists INJECTED — the seam that lets
-    * a caller union the on-disk sealed lists with not-yet-published
-    * rows (the [[graft.streaming.IndexIngest]] growing segment)
-    * without changing the probe/ADC/rerank pipeline.
-    */
-  private[graft] def searchLists(s: SparkSession, path: String,
-      stored: DataFrame, q: DataFrame, corpus: DataFrame): DataFrame =
-    searchFrames(s, s.read.parquet(centPath(path)),
-      s.read.parquet(cbPath(path)), stored, q, corpus)
-
-  /** [[searchLists]] with the quantizer tables ALSO injected — the
-    * seam [[VersionedIndex]] uses to point the probe/ADC/rerank
-    * pipeline at one manifest-resolved snapshot of all three tables.
+  /** IVFADC for a (query_id, qv, qn) set over the given quantizer
+    * (cent, cb) and inverted-list (vec_id, codes, cid) frames; exact
+    * rerank against `corpus`. Same shape as [[VectorSearch.ivfPqTopK]]
+    * with every index input injected — [[VersionedIndex.search]]
+    * points it at one manifest-resolved snapshot, and
+    * [[graft.streaming.IndexIngest.searchAll]] at that snapshot's
+    * lists ∪ the not-yet-published staged rows.
     */
   private[graft] def searchFrames(s: SparkSession, cent: DataFrame,
       cb: DataFrame, stored: DataFrame, q: DataFrame,
@@ -279,26 +155,19 @@ object VectorIndex {
       e.agg(floor(count(lit(1)) * lit(BaseFrac)).cast("long").as("thr"))))
 
   // -----------------------------------------------------------------
-  // ss_ivfpq_incr: the full persisted-index lifecycle, oracle-gated.
-  // The production artifact API above takes a caller-chosen path; the
-  // declared gate's store lives in the session's [[StoreRoot]].
+  // ss_ivfpq_incr: the full persisted-index lifecycle, oracle-gated —
+  // the same publish chain as ss_version_search, in its own store.
   def ivfPqIncremental(s: SparkSession, dir: String): DataFrame = {
-    val path = StoreRoot.path(s, "ivfpq_index", dir)
+    val root = StoreRoot.path(s, "ivfpq_index", dir)
     graft.operators.Lineage.ensure(s, dir, "ss_ivfpq_incr_store") {
       // The build/append chain (Lloyd rounds + batch encodes) is
       // bound to the typed-hash child session via its input frame
       // (round 14 — GraftSession.typedHash scaladoc).
-      val et = withThreshold(
-        vecs(graft.GraftSession.typedHash(s), dir)).localCheckpoint()
-      build(et.filter(col("vec_id") < col("thr")).drop("thr"), path)
-      append(s, path,
-        et.filter(col("vec_id") >= col("thr")).drop("thr"))
+      VersionedIndex.publishBaseAndIncrement(s, root,
+        vecs(graft.GraftSession.typedHash(s), dir), "ivfpq")
     }
     val e = vecs(s, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    search(s, path, q, e)
+    VersionedIndex.search(s, root, queryFrame(e), e)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

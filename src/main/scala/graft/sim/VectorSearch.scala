@@ -45,6 +45,7 @@ object VectorSearch {
   val VDim = 64
 
   import graft.functions.VectorFunctions.{ddot, l2norm}
+  import graft.operators.PhaseLog.phase
 
   /** vec_id, v (double array), nrm (L2 norm). */
   private[graft] def vecs(s: SparkSession, dir: String): DataFrame =
@@ -52,6 +53,14 @@ object VectorSearch {
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .select(col("vec_id"), col("v"), l2norm(col("v")).as("nrm"))
+
+  /** The query batch (query_id, qv, qn): the first [[NumQueries]]
+    * vectors of `e` (vec_id, v, nrm).
+    */
+  private[graft] def queryFrame(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"),
+        col("nrm").as("qn"))
 
   /** Native codegen'd dot product (graft.functions.DoubleDot) — same
     * strict fold as the interpreted form and the DuckDB oracle.
@@ -63,9 +72,7 @@ object VectorSearch {
   // ss_cosine_topk: exact top-k neighbors for each query vector.
   def cosineTopK(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
+    val q = queryFrame(e)
     val w = Window.partitionBy("query_id")
       .orderBy(desc("cos"), asc("neighbor_id"))
     e.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -185,14 +192,14 @@ object VectorSearch {
     */
   private[graft] def lloydCentroids(train: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge.statsBarrier
-    val e = VectorIndex.phase("cent: seed ckpt")(train.localCheckpoint())
+    val e = phase("cent: seed ckpt")(train.localCheckpoint())
     // Round 13: the per-round update join (asg ⋈ eq by vec_id)
     // re-exchanged AND re-sorted this wide quantized frame EVERY
     // round. Partition + sort it by the join key ONCE — the
     // checkpoint's LogicalRDD carries outputPartitioning/-Ordering,
     // so all [[KmIters]] joins reuse the layout and only the slim
     // per-round assignment side moves.
-    val eq = VectorIndex.phase("cent: quant ckpt") {
+    val eq = phase("cent: quant ckpt") {
       e.select(col("vec_id"), quantize(col("v")).as("qv"))
         .repartition(col("vec_id"))
         .sortWithinPartitions("vec_id")
@@ -200,7 +207,7 @@ object VectorSearch {
     }
     var cent = centroids(e)
     for (i <- 1 to KmIters)
-      cent = VectorIndex.phase(s"cent: round $i") {
+      cent = phase(s"cent: round $i") {
         statsBarrier(kmeansRound(e, eq, cent).localCheckpoint())
       }
     cent
@@ -264,12 +271,12 @@ object VectorSearch {
     */
   private[graft] def lloydCodebooks(train: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge.statsBarrier
-    val sub = VectorIndex.phase("cb: subvec ckpt") {
+    val sub = phase("cb: subvec ckpt") {
       subvecs(train).localCheckpoint()
     }
     // Same one-time layout as lloydCentroids' eq: the per-round
     // update join re-used this frame by (vec_id, m) every round.
-    val subq = VectorIndex.phase("cb: quant ckpt") {
+    val subq = phase("cb: quant ckpt") {
       sub.select(col("vec_id"), col("m"),
         quantize(col("sv")).as("sq"))
         .repartition(col("vec_id"), col("m"))
@@ -280,7 +287,7 @@ object VectorSearch {
       .select(col("m"), col("vec_id").cast("int").as("code"),
         col("sv").as("cbv"))
     for (i <- 1 to KmIters)
-      cb = VectorIndex.phase(s"cb: round $i") {
+      cb = phase(s"cb: round $i") {
         statsBarrier(pqRound(sub, subq, cb).localCheckpoint())
       }
     cb
@@ -346,9 +353,7 @@ object VectorSearch {
     val assign = ivfAssign(s, dir)
 
     // Probes: the NProbe nearest centroids per query.
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
+    val q = queryFrame(e)
     val wp = Window.partitionBy("query_id").orderBy(desc("pcos"), asc("cid"))
     val probes = q.join(broadcast(cent))
       .select(col("query_id"), col("qv"), col("qn"), col("cid"),
@@ -611,9 +616,7 @@ object VectorSearch {
 
   def pqTopK(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
+    val q = queryFrame(e)
     val dts = pqDistTables(s, dir, q)
     val wc = Window.partitionBy("query_id")
       .orderBy(asc("est"), asc("neighbor_id"))
@@ -676,9 +679,7 @@ object VectorSearch {
       "ss_pq_cb" -> (() => lloydCodebooks(vecs(s, dir)))))
     val e = vecs(s, dir)
     val cent = trainedCentroids(s, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
+    val q = queryFrame(e)
 
     // Probes: the NProbe nearest centroids per query (as [[ivfTopK]]).
     val wp = Window.partitionBy("query_id").orderBy(desc("pcos"), asc("cid"))

@@ -6,17 +6,17 @@ import org.apache.spark.sql.functions._
 
 import graft.core.StoreRoot
 
-/** VERSIONED ANN INDEX — atomic publish for CONCURRENT READERS
-  * (round-8 forward item: "version-pointer atomic index publish").
+/** VERSIONED ANN INDEX — the engine's one on-disk IVFPQ format,
+  * with atomic publish for CONCURRENT READERS (round-8 forward item:
+  * "version-pointer atomic index publish").
   *
-  * [[VectorIndex]] is a single mutable artifact: `append` adds files
-  * under `lists/` in place and `compact` dynamic-overwrites bloated
-  * partitions, so a reader planning a scan while a writer commits can
-  * see a TORN index (half the appended cells, or a partition mid-
-  * overwrite). Production table formats solve this with immutable
-  * snapshots + an atomic commit marker (Iceberg/Delta's manifest
-  * discipline); this module is that design over the same three
-  * tables:
+  * An index written in place (appends adding files under `lists/`, a
+  * compaction overwriting partitions) can show a reader planning a
+  * scan while a writer commits a TORN index: half the appended
+  * cells, or a partition mid-overwrite. Production table formats
+  * solve this with immutable snapshots + an atomic commit marker
+  * (Iceberg/Delta's manifest discipline); this module is that design
+  * over the IVFPQ index's three tables:
   *
   * ```
   * <root>/centroids/ pub=<p>/…          immutable data, partitioned
@@ -57,16 +57,22 @@ import graft.core.StoreRoot
   * publisher's uncommitted directory is indistinguishable from a
   * crashed one's) and no reader still holds a dropped version.
   *
+  * Every declared index store (ss_ivfpq_incr, ss_version_search,
+  * ss_split_search, ss_delete_search, ss_rag_index and the
+  * [[graft.streaming.IndexIngest]] store behind ss_ingest_search) is
+  * one of these roots.
+  *
   * 100 TB shape: commit cost is one small JSON + one empty marker
-  * regardless of index size; append cost is |batch|; reader cost is
-  * unchanged from [[VectorIndex.search]] (the manifest resolves to a
-  * `pub IN (…)` partition filter on top of the same probe-pruned
-  * scan); nothing ever rewrites or copies history on the publish
+  * regardless of index size; append cost is |batch|; a reader runs
+  * the [[VectorIndex.searchFrames]] probe with the manifest resolved
+  * to a `pub IN (…)` partition filter on top of the probe-pruned
+  * scan; nothing ever rewrites or copies history on the publish
   * path.
   */
 object VersionedIndex {
 
   import VectorSearch._
+  import graft.operators.PhaseLog.phase
 
   /** One resolved snapshot: which publishes compose each table, plus
     * the cids retired by cell splits ([[publishSplit]]) — rows with a
@@ -195,22 +201,36 @@ object VersionedIndex {
     else base.filter(!col("cid").isin(m.dropCids: _*))
   }
 
-  /** New quantizer generation: train on `base`, encode it, commit.
-    * Returns the committed version number.
+  /** New quantizer generation: train on `base`, encode it, commit —
+    * the engine's one train-and-encode path. Returns the committed
+    * version number.
     */
   def publishBuild(s: SparkSession, root: String,
       base: DataFrame): Long = {
     val v = nextVersion(s, root)
     val pub = s"p$v"
-    val cent = lloydCentroids(base).localCheckpoint()
-    val cb = lloydCodebooks(base).localCheckpoint()
-    cent.withColumn("pub", lit(pub)).write.mode("append")
-      .partitionBy("pub").parquet(centDir(root))
-    cb.withColumn("pub", lit(pub)).write.mode("append")
-      .partitionBy("pub").parquet(cbDir(root))
-    VectorIndex.encode(base, cent, cb).withColumn("pub", lit(pub))
-      .write.mode("append").partitionBy("pub", "cid")
-      .parquet(listsDir(root))
+    // The two trainers are independent fixed-round chains of small
+    // sequential jobs; training them CONCURRENTLY (round 12) lets the
+    // local scheduler interleave their per-round jobs, so the build's
+    // wall is ~max of the two instead of their sum. Each chain is
+    // internally eager (localCheckpoint per round), so the threads do
+    // real work, not plan construction.
+    val Seq(cent, cb) = phase("train(cent||cb)") {
+      graft.operators.Lineage.all(Seq(
+        () => lloydCentroids(base).localCheckpoint(),
+        () => lloydCodebooks(base).localCheckpoint()))
+    }
+    phase("write quantizers") {
+      cent.withColumn("pub", lit(pub)).write.mode("append")
+        .partitionBy("pub").parquet(centDir(root))
+      cb.withColumn("pub", lit(pub)).write.mode("append")
+        .partitionBy("pub").parquet(cbDir(root))
+    }
+    phase("encode+write base") {
+      VectorIndex.encode(base, cent, cb).withColumn("pub", lit(pub))
+        .write.mode("append").partitionBy("pub", "cid")
+        .parquet(listsDir(root))
+    }
     commit(s, root, Manifest(v, pub, Seq(pub)))
     v
   }
@@ -225,17 +245,30 @@ object VersionedIndex {
       batch: DataFrame): Long = {
     val prev = currentManifest(s, root)
       .getOrElse(sys.error(s"$root: nothing committed to append to"))
+    phase("encode+append batch") {
+      commitRows(s, root, prev, VectorIndex.encode(batch,
+        centOf(s, root, prev), cbOf(s, root, prev)))
+    }
+  }
+
+  /** Land already-encoded (vec_id, codes, cid) `rows` — encoded
+    * against `prev`'s quantizers — as one fresh list pub and commit a
+    * manifest referencing `prev`'s pubs + the new one. The tail every
+    * list-only publish shares ([[publishAppend]],
+    * [[graft.streaming.IndexIngest.publish]]).
+    */
+  private[graft] def commitRows(s: SparkSession, root: String,
+      prev: Manifest, rows: DataFrame): Long = {
     val v = nextVersion(s, root)
     val pub = s"p$v"
-    VectorIndex.encode(batch, centOf(s, root, prev), cbOf(s, root, prev))
-      .withColumn("pub", lit(pub))
+    rows.withColumn("pub", lit(pub))
       .write.mode("append").partitionBy("pub", "cid")
       .parquet(listsDir(root))
     // Carry the retired-cid set forward (round-13 fix): an append
     // after a split/delete previously committed dropCids = Nil,
     // silently RESURRECTING every retired cid's rows in the prior
-    // pubs for the new snapshot. The encode above can only assign
-    // cids present in centOf(prev) — never a retired one — so
+    // pubs for the new snapshot. Rows encoded against centOf(prev)
+    // can only carry cids present there — never a retired one — so
     // carrying the drops is always correct.
     commit(s, root, Manifest(v, prev.quantPub, prev.listPubs :+ pub,
       prev.dropCids))
@@ -244,8 +277,8 @@ object VersionedIndex {
 
   /** Maintenance snapshot: rewrite the CURRENT list set as one fresh
     * per-cid-clustered pub and commit a manifest referencing only it.
-    * Unlike [[VectorIndex.compact]] this never overwrites — readers
-    * of older versions keep their pubs bit-for-bit until [[gc]].
+    * Nothing is overwritten — readers of older versions keep their
+    * pubs bit-for-bit until [[gc]].
     */
   def publishCompact(s: SparkSession, root: String): Long = {
     val prev = currentManifest(s, root)
@@ -271,8 +304,8 @@ object VersionedIndex {
     *
     *  - occupancy = per-cid counts of the current snapshot's lists
     *    (a [[VectorSearch.NumCentroids]]-row aggregate; the two
-    *    driver reads on it are metadata-scale, the [[VectorIndex
-    *    .compact]] directory-listing class);
+    *    driver reads on it are metadata-scale, the class of a
+    *    directory listing);
     *  - split runs only if hottest > `minRatio` × mean occupancy
     *    (None = balanced store untouched — re-running is a no-op);
     *  - BALANCED MEDIAN BISECTION: anchor = the cell's min-vec_id
@@ -554,35 +587,41 @@ object VersionedIndex {
     (dropVs, droppedPubs ++ droppedCidDirs)
   }
 
+  /** The declared stores' common prologue: delete the root a crashed
+    * previous run left, split `e` at the [[VectorIndex.BaseFrac]]
+    * threshold (checkpointed under the phase tag `<tag>: threshold
+    * ckpt`), then publish v1 = build(base) and v2 = append(increment).
+    * The session `e` is bound to is the one the build runs on.
+    */
+  private[graft] def publishBaseAndIncrement(s: SparkSession, root: String,
+      e: DataFrame, tag: String): Unit = {
+    hfs(s, root).delete(new HPath(root), true)
+    val et = phase(s"$tag: threshold ckpt") {
+      VectorIndex.withThreshold(e).localCheckpoint()
+    }
+    publishBuild(s, root, et.filter(col("vec_id") < col("thr")).drop("thr"))
+    publishAppend(s, root,
+      et.filter(col("vec_id") >= col("thr")).drop("thr"))
+  }
+
   // -----------------------------------------------------------------
   // ss_version_search: the versioned lifecycle, oracle-gated. v1 =
-  // publishBuild(base), v2 = publishAppend(increment) — so the newest
-  // snapshot's contents are EXACTLY ss_ivfpq_incr's store and the
-  // oracle is reused verbatim (base-trained quantizers, full corpus
-  // encoded with them, IVFADC search): matching hashes prove the
-  // manifest-resolved read composes the two pubs into precisely the
-  // rebuilt index. The spec additionally pins what the oracle cannot
-  // express — that v1 still answers with the BASE-ONLY result after
-  // v2 commits (snapshot isolation), the crash-window and gc
-  // behaviors.
+  // publishBuild(base), v2 = publishAppend(increment) — the same chain
+  // as ss_ivfpq_incr's store, so the oracle is reused verbatim
+  // (base-trained quantizers, full corpus encoded with them, IVFADC
+  // search): matching hashes prove the manifest-resolved read
+  // composes the two pubs into precisely the rebuilt index. The spec
+  // additionally pins what the oracle cannot express — that v1 still
+  // answers with the BASE-ONLY result after v2 commits (snapshot
+  // isolation), the crash-window and gc behaviors.
   def versionSearch(s: SparkSession, dir: String): DataFrame = {
     val root = StoreRoot.path(s, "vindex", dir)
     graft.operators.Lineage.ensure(s, dir, "ss_version_store") {
-      val fs = hfs(s, root)
-      fs.delete(new HPath(root), true) // a crashed previous run
-      val et = VectorIndex.withThreshold(
-        vecs(graft.GraftSession.typedHash(s), dir)).localCheckpoint()
-      publishBuild(s, root,
-        et.filter(col("vec_id") < col("thr")).drop("thr"))
-      publishAppend(s, root,
-        et.filter(col("vec_id") >= col("thr")).drop("thr"))
-      ()
+      publishBaseAndIncrement(s, root,
+        vecs(graft.GraftSession.typedHash(s), dir), "version")
     }
     val e = vecs(s, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    search(s, root, q, e)
+    search(s, root, queryFrame(e), e)
   }
 
   // ss_split_search: the versioned lifecycle PLUS a cell split —
@@ -594,22 +633,13 @@ object VersionedIndex {
   def splitSearch(s: SparkSession, dir: String): DataFrame = {
     val root = StoreRoot.path(s, "vsplit", dir)
     graft.operators.Lineage.ensure(s, dir, "ss_split_store") {
-      val fs = hfs(s, root)
-      fs.delete(new HPath(root), true)
-      val et = VectorIndex.withThreshold(
-        vecs(graft.GraftSession.typedHash(s), dir)).localCheckpoint()
-      publishBuild(s, root,
-        et.filter(col("vec_id") < col("thr")).drop("thr"))
-      publishAppend(s, root,
-        et.filter(col("vec_id") >= col("thr")).drop("thr"))
+      publishBaseAndIncrement(s, root,
+        vecs(graft.GraftSession.typedHash(s), dir), "split")
       publishSplit(s, root, vecs(s, dir), minRatio = 0.0)
       ()
     }
     val e = vecs(s, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    search(s, root, q, e)
+    search(s, root, queryFrame(e), e)
   }
 
   /** The declared delete slice: ~6% of the corpus, spread across
@@ -628,14 +658,8 @@ object VersionedIndex {
   def deleteSearch(s: SparkSession, dir: String): DataFrame = {
     val root = StoreRoot.path(s, "vdelete", dir)
     graft.operators.Lineage.ensure(s, dir, "ss_delete_store") {
-      val fs = hfs(s, root)
-      fs.delete(new HPath(root), true)
-      val et = VectorIndex.withThreshold(
-        vecs(graft.GraftSession.typedHash(s), dir)).localCheckpoint()
-      publishBuild(s, root,
-        et.filter(col("vec_id") < col("thr")).drop("thr"))
-      publishAppend(s, root,
-        et.filter(col("vec_id") >= col("thr")).drop("thr"))
+      publishBaseAndIncrement(s, root,
+        vecs(graft.GraftSession.typedHash(s), dir), "delete")
       val del = vecs(s, dir)
         .filter(col("vec_id") % DeleteMod === DeleteRem)
         .select("vec_id")
@@ -646,10 +670,7 @@ object VersionedIndex {
       ()
     }
     val e = vecs(s, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    search(s, root, q, e)
+    search(s, root, queryFrame(e), e)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.StoreRoot
-import graft.sim.VectorIndex
+import graft.sim.{VectorIndex, VectorSearch, VersionedIndex}
 import graft.sources.Formats
 
-/** STREAMING INGESTION into the persisted ANN index — the lifecycle
-  * composition a production vector store runs continuously: embedding
-  * batches arrive on a stream, each micro-batch is encoded against
-  * the STORED quantizers (never retrained — `|batch|` work,
+/** STREAMING INGESTION into the persisted ANN index (a
+  * [[VersionedIndex]] root) — the lifecycle composition a production
+  * vector store runs continuously: embedding batches arrive on a
+  * stream, each micro-batch is encoded against the current
+  * snapshot's STORED quantizers (never retrained — `|batch|` work,
   * independent of store size) and becomes searchable immediately,
   * with exactly-once effect under Structured Streaming's
   * at-least-once `foreachBatch` replay contract.
@@ -24,17 +25,19 @@ import graft.sources.Formats
   *    area partitioned by `batch_id` via dynamic partition overwrite
   *    ([[Sinks]] discipline): a replayed batch REPLACES its own
   *    partition instead of duplicating rows, so retries converge.
-  *    The sealed `cid=` lists are never touched by the hot path —
-  *    no read-modify-write on the index inside a micro-batch.
+  *    The committed index is never touched by the hot path — no
+  *    read-modify-write on the index inside a micro-batch.
   *  - [[searchAll]] probes sealed ∪ staged: the staged rows carry
-  *    the same (vec_id, codes, cid) schema, so the union feeds the
-  *    unchanged probe/ADC/rerank pipeline and freshly streamed
-  *    vectors are findable BEFORE any publish.
-  *  - [[publish]] seals: folds all staged rows into the `cid=`
-  *    inverted lists (one partitioned append — the
-  *    [[VectorIndex.append]] write shape) and clears the staging
-  *    area. A maintenance op like [[VectorIndex.compact]], run
-  *    between stream runs, not inside the hot path.
+  *    the same (vec_id, codes, cid) schema as the current snapshot's
+  *    lists, so the union feeds the unchanged probe/ADC/rerank
+  *    pipeline and freshly streamed vectors are findable BEFORE any
+  *    publish.
+  *  - [[publish]] seals: commits each staged batch as one list pub
+  *    of a new snapshot ([[VersionedIndex.commitRows]], the tail of
+  *    [[VersionedIndex.publishAppend]]) and clears the staging area.
+  *    Maintenance ([[VersionedIndex.publishCompact]],
+  *    [[VersionedIndex.gc]]) runs between stream runs, not inside
+  *    the hot path.
   *
   * Scale shape: per micro-batch cost is encode (two broadcast joins)
   * + one write of `|batch|` rows; search overhead of the growing
@@ -46,15 +49,21 @@ object IndexIngest {
 
   private[graft] def staged(path: String) = s"$path/staged"
 
+  private def current(s: SparkSession, path: String) =
+    VersionedIndex.currentManifest(s, path)
+      .getOrElse(sys.error(s"$path: no committed index version"))
+
   /** Run the embedding stream `batches` (vec_id, v, nrm) into the
-    * staging area of the index at `path`. `AvailableNow` drains what
-    * is present and stops — the harness lifecycle; a production run
-    * would use a processing-time trigger with the same body.
+    * staging area of the index at `path`, encoded against the current
+    * snapshot's quantizers. `AvailableNow` drains what is present and
+    * stops — the harness lifecycle; a production run would use a
+    * processing-time trigger with the same body.
     */
   def ingest(s: SparkSession, path: String, batches: DataFrame,
       checkpoint: String): Unit = {
-    val cent = s.read.parquet(VectorIndex.centPath(path)).localCheckpoint()
-    val cb = s.read.parquet(VectorIndex.cbPath(path)).localCheckpoint()
+    val m = current(s, path)
+    val cent = VersionedIndex.centOf(s, path, m).localCheckpoint()
+    val cb = VersionedIndex.cbOf(s, path, m).localCheckpoint()
     val q = batches.writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
         Formats.backfillPartitions(
@@ -83,36 +92,37 @@ object IndexIngest {
     else None
   }
 
-  /** IVFADC over sealed ∪ staged — streamed vectors are searchable
-    * before any publish. Falls back to the sealed-only scan when the
-    * staging area is empty or absent.
+  /** IVFADC over the current snapshot's lists ∪ staged — streamed
+    * vectors are searchable before any publish. Falls back to the
+    * sealed-only scan when the staging area is empty or absent.
     */
   def searchAll(s: SparkSession, path: String, q: DataFrame,
       corpus: DataFrame): DataFrame = {
-    val sealedLists = s.read.parquet(VectorIndex.lists(path))
-      .withColumn("cid", col("cid").cast("long"))
+    val m = current(s, path)
+    val sealedLists = VersionedIndex.listsOf(s, path, m)
       .select("vec_id", "codes", "cid")
     val all = stagedRows(s, path)
       .fold(sealedLists)(st => sealedLists.unionByName(st))
-    VectorIndex.searchLists(s, path, all, q, corpus)
+    VectorIndex.searchFrames(s, VersionedIndex.centOf(s, path, m),
+      VersionedIndex.cbOf(s, path, m), all, q, corpus)
   }
 
-  /** Seal the staging area: fold staged rows into the `cid=`
-    * inverted lists BATCH BY BATCH, deleting each batch's staging
-    * partition only after its append lands — so a crash anywhere
-    * leaves at most ONE batch in the appended-but-still-staged state,
-    * and the recovery for that state is built into the append itself:
-    * each batch is anti-joined against the sealed lists on `vec_id`
+  /** Seal the staging area BATCH BY BATCH: each batch commits as one
+    * list pub of a new snapshot, and its staging partition is deleted
+    * only after that commit — so a crash anywhere leaves at most ONE
+    * batch in the committed-but-still-staged state, and the recovery
+    * for that state is built into the publish itself: each batch is
+    * anti-joined against the current snapshot's lists on `vec_id`
     * (with the scan pruned to the batch's own cid partitions by a
-    * broadcast-join DynamicPruning, the [[VectorIndex]] probe
-    * discipline), so re-running publish after any crash appends only
-    * what is genuinely missing. Exactly-once effect end-to-end:
-    * ingest replay converges by batch_id overwrite, publish replay
-    * converges by the anti-join — no manifest or reader-side dedup
-    * needed, and the recovery cost is one batch against its own
-    * partitions, never a store scan.
+    * broadcast-join DynamicPruning, the [[VectorIndex.searchFrames]]
+    * probe discipline), and a batch with no missing row commits
+    * nothing. Re-running publish after any crash commits only what is
+    * genuinely missing. Exactly-once effect end-to-end: ingest replay
+    * converges by batch_id overwrite, publish replay converges by the
+    * anti-join — no reader-side dedup needed, and the recovery cost
+    * is one batch against its own partitions, never a store scan.
     *
-    * Returns the number of rows actually appended (a recovery rerun
+    * Returns the number of rows actually committed (a recovery rerun
     * reports only the delta).
     */
   // -----------------------------------------------------------------
@@ -124,7 +134,6 @@ object IndexIngest {
   // batch-appended store (`ss_ivfpq_incr`'s SQL, reused VERBATIM):
   // growing-segment reads are not weaker than sealed reads.
   def ingestSearch(s0: SparkSession, dir: String): DataFrame = {
-    import graft.sim.{VectorIndex, VectorSearch}
     val path = StoreRoot.path(s0, "ingest_gate", dir)
     graft.operators.Lineage.ensure(s0, dir, "ss_ingest_store") {
       // Store build on a child session with wave-sized shuffle
@@ -137,8 +146,8 @@ object IndexIngest {
       fs.delete(root, true)
       val et = VectorIndex.withThreshold(VectorSearch.vecs(s, dir))
         .localCheckpoint()
-      VectorIndex.build(
-        et.filter(col("vec_id") < col("thr")).drop("thr"), path)
+      VersionedIndex.publishBuild(s, path,
+        et.filter(col("vec_id") < col("thr")).drop("thr"))
       val rest = et.filter(col("vec_id") >= col("thr")).drop("thr")
         .localCheckpoint()
       // two waves split by parity → two micro-batches
@@ -154,10 +163,7 @@ object IndexIngest {
         s"$path/ckpt")
     }
     val e = VectorSearch.vecs(s0, dir)
-    val q = e.filter(col("vec_id") < VectorSearch.NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    searchAll(s0, path, q, e)
+    searchAll(s0, path, VectorSearch.queryFrame(e), e)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -169,7 +175,7 @@ object IndexIngest {
     * read path changes nothing but the publish timing.
     */
   val oracles: Map[String, String] = Map(
-    "ss_ingest_search" -> graft.sim.VectorIndex.oracles("ss_ivfpq_incr"),
+    "ss_ingest_search" -> VectorIndex.oracles("ss_ivfpq_incr"),
   )
 
   def publish(s: SparkSession, path: String): Long = {
@@ -185,17 +191,17 @@ object IndexIngest {
     batchIds.foreach { b =>
       val rows = s.read.parquet(s"${staged(path)}/batch_id=$b")
         .select("vec_id", "codes", "cid").localCheckpoint()
+      val prev = current(s, path)
       // Sealed rows in ONLY this batch's partitions (broadcast join →
       // dynamic partition pruning on the lists scan).
-      val sealedKeys = s.read.parquet(VectorIndex.lists(path))
-        .withColumn("cid", col("cid").cast("long"))
+      val sealedKeys = VersionedIndex.listsOf(s, path, prev)
         .join(broadcast(rows.select("cid").distinct()), "cid")
         .select("vec_id")
       val missing = rows.join(sealedKeys, Seq("vec_id"), "left_anti")
-        .localCheckpoint() // pin BEFORE the append changes the lists
-      total += missing.count()
-      missing.write.mode("append").partitionBy("cid")
-        .parquet(VectorIndex.lists(path))
+        .localCheckpoint() // counted, then written: one anti-join
+      val n = missing.count()
+      if (n > 0) VersionedIndex.commitRows(s, path, prev, missing)
+      total += n
       fs.delete(new org.apache.hadoop.fs.Path(
         s"${staged(path)}/batch_id=$b"), true)
     }

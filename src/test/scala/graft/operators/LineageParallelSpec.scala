@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** [[Lineage.parallel]] (round 12 — the concurrent trainer builds)
-  * and [[graft.functions.VecSumAgg]] (the one-shuffle Lloyd update):
-  * registration semantics and exactness the oracle rows consume
-  * indirectly.
+/** [[Lineage.parallel]] and [[Lineage.all]] (round 12 — the
+  * concurrent trainer builds) and [[graft.functions.VecSumAgg]] (the
+  * one-shuffle Lloyd update): registration and failure semantics and
+  * exactness the oracle rows consume indirectly.
   */
 class LineageParallelSpec extends SparkSpec {
   import spark.implicits._
@@ -36,6 +36,54 @@ class LineageParallelSpec extends SparkSpec {
       "lp_a" -> mk(99), "lp_c" -> mk(3)))
     assert(built.get() === 3)
     assert(Lineage.keys(spark).contains(s"$dir#lp_c"))
+  }
+
+  test("a failed build surfaces only after its sibling has finished, " +
+    "no helper thread outlives the call, and survivors register") {
+    import java.util.concurrent.CountDownLatch
+    import java.util.concurrent.atomic.AtomicBoolean
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val thrown = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val siblingDone = new AtomicBoolean(false)
+    // Opens the sibling's latch only once the failure has been thrown
+    // (and a while after), so an early rethrow would see it running.
+    val releaser = new Thread(() => {
+      thrown.await()
+      Thread.sleep(300)
+      release.countDown()
+    })
+    releaser.start()
+    val err = intercept[IllegalStateException] {
+      Lineage.all(Seq(
+        () => {
+          threads.add(Thread.currentThread())
+          thrown.countDown()
+          throw new IllegalStateException("trainer failed")
+        },
+        () => {
+          threads.add(Thread.currentThread())
+          release.await()
+          siblingDone.set(true)
+        }))
+    }
+    assert(err.getMessage === "trainer failed")
+    assert(siblingDone.get(), "the failure overtook its running sibling")
+    assert(threads.size === 2)
+    threads.iterator().forEachRemaining(t =>
+      assert(!t.isAlive, s"$t outlived the call"))
+    releaser.join()
+
+    // Lineage.parallel: the failure is rethrown, the survivor is
+    // registered, the failed key is not.
+    val dir = "/tmp/lineage_par_fail_spec"
+    intercept[IllegalStateException] {
+      Lineage.parallel(spark, dir, Seq(
+        "lp_ok" -> (() => Seq(1).toDF("x")),
+        "lp_bad" -> (() => throw new IllegalStateException("bad"))))
+    }
+    assert(Lineage.keys(spark).contains(s"$dir#lp_ok"))
+    assert(!Lineage.keys(spark).contains(s"$dir#lp_bad"))
   }
 
   test("VecSumAgg: element-wise exact long sums with partial " +

@@ -34,9 +34,7 @@ class VersionedIndexSpec extends SparkSpec with TempDirs {
   }
 
   private def queriesOf(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") < VectorSearch.NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
+    VectorSearch.queryFrame(e)
 
   private def rows(df: DataFrame): Seq[(Long, Long, Long)] =
     df.select("query_id", "neighbor_id", "rank").collect()
@@ -61,10 +59,13 @@ class VersionedIndexSpec extends SparkSpec with TempDirs {
     VersionedIndex.publishBuild(spark, root, base)
     val v1Before = rows(VersionedIndex.search(spark, root, q, e))
 
-    // An UNversioned reference index over base only.
-    val refRoot = freshRoot()
-    VectorIndex.build(base, refRoot)
-    val baseOnly = rows(VectorIndex.search(spark, refRoot, q, e))
+    // An UNversioned reference over base only: IVFADC over the
+    // base-trained quantizers and the base encoded with them.
+    val cent = VectorSearch.lloydCentroids(base).localCheckpoint()
+    val cb = VectorSearch.lloydCodebooks(base).localCheckpoint()
+    def reference(corpus: DataFrame) = rows(VectorIndex.searchFrames(
+      spark, cent, cb, VectorIndex.encode(corpus, cent, cb), q, e))
+    val baseOnly = reference(base)
     assert(v1Before === baseOnly)
 
     val p1Lists = new java.io.File(s"$root/lists/pub=p1")
@@ -88,10 +89,10 @@ class VersionedIndexSpec extends SparkSpec with TempDirs {
     assert(fileSizes === sizesBefore)
 
     // The default (newest) resolution sees base ∪ increment — equal
-    // to the unversioned incremental store's answer.
-    VectorIndex.append(spark, refRoot, inc)
+    // to the reference over the full corpus under the same
+    // quantizers.
     assert(rows(VersionedIndex.search(spark, root, q, e)) ===
-      rows(VectorIndex.search(spark, refRoot, q, e)))
+      reference(e))
   }
 
   test("a crashed publisher (no marker) is invisible and never " +
@@ -463,5 +464,27 @@ class VersionedIndexSpec extends SparkSpec with TempDirs {
     assert(occ.sum === occ0.sum, "no vector lost by the loop")
     assert(occ.max <= ratio * (occ.sum.toDouble / occ.length),
       s"post-condition violated: ${occ.max} vs mean ${occ.sum / occ.length}")
+  }
+
+  test("every declared IVFPQ store commits through a manifest and " +
+      "keeps no in-place lists layout") {
+    val stores: Seq[(String, (org.apache.spark.sql.SparkSession,
+        String) => DataFrame)] = Seq(
+      "ivfpq_index" -> VectorIndex.ivfPqIncremental,
+      "vindex" -> VersionedIndex.versionSearch,
+      "vsplit" -> VersionedIndex.splitSearch,
+      "vdelete" -> VersionedIndex.deleteSearch,
+      "rag_index" -> RagRetrieve.ragIndex,
+      "ingest_gate" -> graft.streaming.IndexIngest.ingestSearch)
+    stores.foreach { case (family, query) =>
+      assert(query(spark, sf).collect().nonEmpty, family)
+      val root = graft.core.StoreRoot.path(spark, family, sf)
+      assert(VersionedIndex.committedVersions(spark, root).nonEmpty,
+        s"$family: no committed version under $root")
+      val top = Option(new java.io.File(s"$root/lists").listFiles())
+        .getOrElse(Array.empty[java.io.File])
+      assert(!top.exists(_.getName.startsWith("cid=")),
+        s"$family: top-level lists/cid= directories under $root")
+    }
   }
 }

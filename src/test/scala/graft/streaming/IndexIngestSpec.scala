@@ -6,15 +6,23 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, TempDirs}
 import graft.core.StoreRoot
-import graft.sim.{VectorIndex, VectorSearch}
+import graft.sim.{VectorSearch, VersionedIndex}
 
 /** Streaming-ingest lifecycle of the persisted ANN index: staged
   * micro-batches are idempotent under replay, searchable before any
-  * publish (growing ∪ sealed), and publish seals them into the
-  * `cid=` lists so the store converges to exactly the batch-append
-  * ground truth.
+  * publish (growing ∪ sealed), and publish commits them as list pubs
+  * so the store converges to exactly the batch-append
+  * ([[VersionedIndex.publishAppend]]) ground truth.
   */
 class IndexIngestSpec extends SparkSpec with TempDirs {
+
+  /** The current snapshot's inverted lists. */
+  private def sealedOf(path: String) = VersionedIndex.listsOf(spark, path,
+    VersionedIndex.currentManifest(spark, path).get)
+
+  private def search(path: String, q: org.apache.spark.sql.DataFrame,
+      e: org.apache.spark.sql.DataFrame) =
+    searchRows(VersionedIndex.search(spark, path, q, e))
 
   private def listRows(df: org.apache.spark.sql.DataFrame) =
     df.select("vec_id", "codes", "cid")
@@ -34,11 +42,11 @@ class IndexIngestSpec extends SparkSpec with TempDirs {
     val twin = root.resolve("twin").toString
     val e = VectorSearch.vecs(spark, sf).localCheckpoint()
     val base = e.filter(col("vec_id") < 350)
-    VectorIndex.build(base, path)
-    VectorIndex.build(base, twin)
+    VersionedIndex.publishBuild(spark, path, base)
+    VersionedIndex.publishBuild(spark, twin, base)
     val waves = Seq(350L, 400L, 450L)
     // Ground truth: the same increments batch-appended.
-    waves.foreach(lo => VectorIndex.append(spark, twin,
+    waves.foreach(lo => VersionedIndex.publishAppend(spark, twin,
       e.filter(col("vec_id") >= lo && col("vec_id") < lo + 50)))
 
     // Stream source: one parquet file per wave → one micro-batch
@@ -58,18 +66,15 @@ class IndexIngestSpec extends SparkSpec with TempDirs {
     // ran as three micro-batches.
     val stagedDf = spark.read.parquet(s"$path/staged")
     assert(stagedDf.select("batch_id").distinct().count() === 3)
-    val twinAppended = spark.read.parquet(s"$twin/lists")
-      .withColumn("cid", col("cid").cast("long"))
-      .filter(col("vec_id") >= 350)
+    val twinAppended = sealedOf(twin).filter(col("vec_id") >= 350)
     assert(listRows(stagedDf) === listRows(twinAppended))
-    // Sealed lists untouched by the hot path.
-    assert(spark.read.parquet(s"$path/lists").count() === 350)
+    // Committed index untouched by the hot path.
+    assert(VersionedIndex.committedVersions(spark, path) === Seq(1L))
+    assert(sealedOf(path).count() === 350)
 
     // Growing ∪ sealed search == the fully-appended twin's search.
-    val q = e.filter(col("vec_id") < VectorSearch.NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val expect = searchRows(VectorIndex.search(spark, twin, q, e))
+    val q = VectorSearch.queryFrame(e)
+    val expect = search(twin, q, e)
     val allDf = IndexIngest.searchAll(spark, path, q, e)
     // The at-scale promise holds THROUGH the union: the probe join's
     // dynamic partition pruning still lands on the sealed cid= scan
@@ -89,14 +94,16 @@ class IndexIngestSpec extends SparkSpec with TempDirs {
       listRows(twinAppended))
 
     // Publish seals: staged cleared, sealed search == twin search,
-    // searchAll falls back to sealed-only, second publish is a no-op.
+    // searchAll falls back to sealed-only, second publish is a no-op
+    // that commits nothing.
     assert(IndexIngest.publish(spark, path) === 150L)
     assert(!Files.exists(java.nio.file.Paths.get(s"$path/staged")))
-    assert(listRows(spark.read.parquet(s"$path/lists")) ===
-      listRows(spark.read.parquet(s"$twin/lists")))
-    assert(searchRows(VectorIndex.search(spark, path, q, e)) === expect)
+    assert(listRows(sealedOf(path)) === listRows(sealedOf(twin)))
+    assert(search(path, q, e) === expect)
     assert(searchRows(IndexIngest.searchAll(spark, path, q, e)) === expect)
+    val committed = VersionedIndex.committedVersions(spark, path)
     assert(IndexIngest.publish(spark, path) === 0L)
+    assert(VersionedIndex.committedVersions(spark, path) === committed)
   }
 
   test("publish recovers from a crash between append and staging " +
@@ -106,12 +113,12 @@ class IndexIngestSpec extends SparkSpec with TempDirs {
     val twin = root.resolve("twin").toString
     val e = VectorSearch.vecs(spark, sf).localCheckpoint()
     val base = e.filter(col("vec_id") < 400)
-    VectorIndex.build(base, path)
-    VectorIndex.build(base, twin)
+    VersionedIndex.publishBuild(spark, path, base)
+    VersionedIndex.publishBuild(spark, twin, base)
     val b1 = e.filter(col("vec_id") >= 400 && col("vec_id") < 450)
     val b2 = e.filter(col("vec_id") >= 450)
-    VectorIndex.append(spark, twin, b1)
-    VectorIndex.append(spark, twin, b2)
+    VersionedIndex.publishAppend(spark, twin, b1)
+    VersionedIndex.publishAppend(spark, twin, b2)
 
     val src = root.resolve("src")
     Files.createDirectories(src)
@@ -122,29 +129,25 @@ class IndexIngestSpec extends SparkSpec with TempDirs {
         .option("maxFilesPerTrigger", "1").parquet(src.toString),
       root.resolve("ckpt").toString)
 
-    // Simulate the crash window: batch 0's rows are ALREADY appended
-    // to the sealed lists, but its staging partition was not cleaned.
+    // Simulate the crash window: batch 0's rows are ALREADY committed
+    // as a list pub, but its staging partition was not cleaned.
     val staged0 = spark.read.parquet(s"$path/staged")
       .filter(col("batch_id") === 0)
       .select("vec_id", "codes", "cid").localCheckpoint()
     val crashedRows = staged0.count()
     assert(crashedRows === 50L)
-    staged0.write.mode("append").partitionBy("cid")
-      .parquet(s"$path/lists")
+    VersionedIndex.commitRows(spark, path,
+      VersionedIndex.currentManifest(spark, path).get, staged0)
 
-    // Recovery publish: the anti-join appends only the OTHER batch.
+    // Recovery publish: the anti-join commits only the OTHER batch.
     assert(IndexIngest.publish(spark, path) === 100L - crashedRows)
     assert(!Files.exists(java.nio.file.Paths.get(s"$path/staged")))
     // No duplicates, store == twin, searches agree.
-    val sealedDf = spark.read.parquet(s"$path/lists")
+    val sealedDf = sealedOf(path)
     assert(sealedDf.count() ===
       sealedDf.select("vec_id").distinct().count())
-    assert(listRows(sealedDf) ===
-      listRows(spark.read.parquet(s"$twin/lists")))
-    val q = e.filter(col("vec_id") < VectorSearch.NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    assert(searchRows(VectorIndex.search(spark, path, q, e)) ===
-      searchRows(VectorIndex.search(spark, twin, q, e)))
+    assert(listRows(sealedDf) === listRows(sealedOf(twin)))
+    val q = VectorSearch.queryFrame(e)
+    assert(search(path, q, e) === search(twin, q, e))
   }
 }
