@@ -1,12 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.StoreRoot
 import graft.dedup.Dedup
-import graft.sources.Formats
 
 /** STREAMING DOCUMENT DEDUP against the persisted signature store
   * (VERDICT r7 item 3): the daily-ingest shape for text — documents
@@ -16,7 +13,7 @@ import graft.sources.Formats
   * pairs become durable with exactly-once effect. The composition of
   * [[Dedup.incremental]]'s store contract (per batch: |batch| sketch
   * work + batch×bucket join work — history is never re-sketched)
-  * with [[IndexIngest]]'s growing/sealed segment lifecycle.
+  * with the [[Segments]] growing/sealed lifecycle.
   *
   * Store layout at `path`:
   *  - `sigs/`      — (doc_id, bi, bh) banded MinHash signatures:
@@ -24,11 +21,11 @@ import graft.sources.Formats
   *  - `shingles/`  — (doc_id, shingles): the exact-verify side table.
   *  - `pairs/`     — (doc_a, doc_b, inter, uni) verified near-dup
   *                   pairs discovered so far.
-  *  - `staged_{sigs,shingles,pairs}/batch_id=N/` — the growing
-  *    segment, landed per micro-batch via dynamic partition
-  *    overwrite so a replayed batch REPLACES its own partition.
+  *  - `staged_{sigs,shingles,pairs}/` — the growing segment, one
+  *    [[Segments.stage]] partition per micro-batch, so a replayed
+  *    batch REPLACES its own partition.
   *
-  * Exactly-once discipline (the [[IndexIngest]] proof shape):
+  * Exactly-once discipline (the [[Segments]] proof shape):
   * ingest replay converges by batch_id overwrite — and each batch
   * joins only against the store plus staged batches with
   * batch_id < its own, so a replay after LATER batches landed still
@@ -53,39 +50,21 @@ object DedupIngest {
   private def stShing(path: String) = s"$path/staged_shingles"
   private def stPairs(path: String) = s"$path/staged_pairs"
 
+  private val SigCols = Seq("doc_id", "bi", "bh")
+  private val ShingCols = Seq("doc_id", "shingles")
+  private val PairCols = Seq("doc_a", "doc_b", "inter", "uni")
+
   /** Build the durable store from the historical corpus
-    * (doc_id, text): signatures + shingle sets, plus an empty pairs
-    * table seeded from the corpus's own internal near-dups? No —
-    * the store starts with NO pairs: pairs are what ingestion
-    * DISCOVERS (historical-internal pairs are a prior run's output,
-    * out of scope by the [[Dedup.incremental]] contract).
+    * (doc_id, text): signatures and shingle sets. The store starts
+    * with NO pairs table: pairs are what ingestion DISCOVERS
+    * (historical-internal pairs are a prior run's output, out of
+    * scope by the [[Dedup.incremental]] contract).
     */
   def build(s: SparkSession, corpus: DataFrame, path: String): Unit = {
     val sh = Dedup.shingleFrame(corpus).localCheckpoint()
     sh.write.mode("overwrite").parquet(shing(path))
     Dedup.bandedSigs(sh).write.mode("overwrite").parquet(sigs(path))
   }
-
-  /** Staged rows with batch_id < `before` (Long.MaxValue = all),
-    * None when no batch partition exists (the [[IndexIngest]]
-    * empty-root crash-window gate).
-    */
-  private def staged(s: SparkSession, root: String,
-      cols: Seq[String], before: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hasBatch = fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-    if (hasBatch)
-      Some(s.read.parquet(root).filter(col("batch_id") < before)
-        .select(cols.map(col): _*))
-    else None
-  }
-
-  private def withStaged(s: SparkSession, sealedDf: DataFrame,
-      root: String, cols: Seq[String], before: Long): DataFrame =
-    staged(s, root, cols, before)
-      .fold(sealedDf)(st => sealedDf.unionByName(st))
 
   /** Run the document stream `batches` (doc_id, text) against the
     * store at `path`. Per micro-batch: sketch the batch, join its
@@ -94,163 +73,81 @@ object DedupIngest {
     * (sigs, shingles, pairs) in the batch's staging partitions.
     */
   def ingest(s: SparkSession, path: String, batches: DataFrame,
-      checkpoint: String): Unit = {
-    val q = batches.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val shB = Dedup.shingleFrame(b).localCheckpoint()
-        val sigB = Dedup.bandedSigs(shB).localCheckpoint()
-        // Prior context: the sealed store plus earlier staged
-        // batches — NOT later ones, so a replayed batch recomputes
-        // its original pair set even after successors landed.
-        val priorSigs = withStaged(s,
-          s.read.parquet(sigs(path)).select("doc_id", "bi", "bh"),
-          stSigs(path), Seq("doc_id", "bi", "bh"), batchId)
-        val priorShing = withStaged(s,
-          s.read.parquet(shing(path)).select("doc_id", "shingles"),
-          stShing(path), Seq("doc_id", "shingles"), batchId)
-        def cond = col("a.bi") === col("b.bi") &&
-          col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id")
-        // (x, batch) for any x — covers batch-batch once — plus
-        // (batch, prior): all colliding pairs with ≥1 batch
-        // endpoint, each once (the Dedup.incremental shape).
-        val up = priorSigs.unionByName(sigB).as("a")
-          .join(sigB.as("b"), cond)
-          .select(col("a.doc_id").as("doc_a"),
-            col("b.doc_id").as("doc_b"))
-        val down = sigB.as("a").join(priorSigs.as("b"), cond)
-          .select(col("a.doc_id").as("doc_a"),
-            col("b.doc_id").as("doc_b"))
-        val cand = up.union(down).distinct()
-        val allSh = priorShing.unionByName(shB)
-        val x = allSh.select(col("doc_id").as("doc_a"),
-          col("shingles").as("sha"))
-        val y = allSh.select(col("doc_id").as("doc_b"),
-          col("shingles").as("shb"))
-        val verified = cand.join(x, "doc_a").join(y, "doc_b")
-          .select(col("doc_a"), col("doc_b"),
-            size(array_intersect(col("sha"), col("shb"))).cast("long")
-              .as("inter"),
-            (size(col("sha")) + size(col("shb"))
-              - size(array_intersect(col("sha"), col("shb"))))
-              .cast("long").as("uni"))
-          .filter(col("inter") * 10 >= col("uni") * 7)
-        Formats.backfillPartitions(
-          sigB.withColumn("batch_id", lit(batchId)),
-          "batch_id", stSigs(path))
-        Formats.backfillPartitions(
-          shB.withColumn("batch_id", lit(batchId)),
-          "batch_id", stShing(path))
-        Formats.backfillPartitions(
-          verified.withColumn("batch_id", lit(batchId)),
-          "batch_id", stPairs(path))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    Streams.drain(batches, checkpoint) { (b, batchId) =>
+      val shB = Dedup.shingleFrame(b).localCheckpoint()
+      val sigB = Dedup.bandedSigs(shB).localCheckpoint()
+      // Prior context: the sealed store plus earlier staged
+      // batches — NOT later ones, so a replayed batch recomputes
+      // its original pair set even after successors landed.
+      val priorSigs = Segments.staged(s,
+        s.read.parquet(sigs(path)).select(SigCols.map(col): _*),
+        stSigs(path), SigCols, batchId)
+      val priorShing = Segments.staged(s,
+        s.read.parquet(shing(path)).select(ShingCols.map(col): _*),
+        stShing(path), ShingCols, batchId)
+      def cond = col("a.bi") === col("b.bi") &&
+        col("a.bh") === col("b.bh") &&
+        col("a.doc_id") < col("b.doc_id")
+      // (x, batch) for any x — covers batch-batch once — plus
+      // (batch, prior): all colliding pairs with ≥1 batch
+      // endpoint, each once (the Dedup.incremental shape).
+      val up = priorSigs.unionByName(sigB).as("a")
+        .join(sigB.as("b"), cond)
+        .select(col("a.doc_id").as("doc_a"),
+          col("b.doc_id").as("doc_b"))
+      val down = sigB.as("a").join(priorSigs.as("b"), cond)
+        .select(col("a.doc_id").as("doc_a"),
+          col("b.doc_id").as("doc_b"))
+      val cand = up.union(down).distinct()
+      val allSh = priorShing.unionByName(shB)
+      val x = allSh.select(col("doc_id").as("doc_a"),
+        col("shingles").as("sha"))
+      val y = allSh.select(col("doc_id").as("doc_b"),
+        col("shingles").as("shb"))
+      val verified = cand.join(x, "doc_a").join(y, "doc_b")
+        .select(col("doc_a"), col("doc_b"),
+          size(array_intersect(col("sha"), col("shb"))).cast("long")
+            .as("inter"),
+          (size(col("sha")) + size(col("shb"))
+            - size(array_intersect(col("sha"), col("shb"))))
+            .cast("long").as("uni"))
+        .filter(col("inter") * 10 >= col("uni") * 7)
+      Segments.stage(stSigs(path))(sigB, batchId)
+      Segments.stage(stShing(path))(shB, batchId)
+      Segments.stage(stPairs(path))(verified, batchId)
+    }
 
   /** All discovered pairs, sealed ∪ staged — results are visible
     * BEFORE any publish, the growing-segment read path.
     */
   def pairsAll(s: SparkSession, path: String): DataFrame = {
-    val cols = Seq("doc_a", "doc_b", "inter", "uni")
     val p = new org.apache.hadoop.fs.Path(pairs(path))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val sealedP =
-      if (fs.exists(p)) s.read.parquet(pairs(path)).select(cols.map(col): _*)
+      if (fs.exists(p))
+        s.read.parquet(pairs(path)).select(PairCols.map(col): _*)
       else s.range(0).select(col("id").as("doc_a"), col("id").as("doc_b"),
         col("id").as("inter"), col("id").as("uni")) // no publish yet
-    withStaged(s, sealedP, stPairs(path), cols, Long.MaxValue)
+    Segments.staged(s, sealedP, stPairs(path), PairCols)
   }
 
-  /** Seal the staging areas into the durable store, batch by batch,
-    * anti-join recovery per table (the [[IndexIngest.publish]]
-    * shape): a rerun after any crash appends only what is genuinely
-    * missing and reports only the delta of PAIRS appended.
+  /** Seal the staging areas into the durable store
+    * ([[Segments.publish]]): each table appends its batch's rows only
+    * where missing (sigs and shingles by doc_id, pairs by endpoint
+    * pair), and a batch's partitions are deleted sigs → shingles →
+    * pairs, pairs LAST. A rerun after any crash appends only what is
+    * genuinely missing and reports only the delta of PAIRS appended.
     */
-  def publish(s: SparkSession, path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // Batch ids are the UNION of batch_id= partitions across all
-    // three staging roots (ADVICE r8): a micro-batch whose
-    // verification found zero pairs writes no staged_pairs partition,
-    // but its sigs/shingles still must seal — enumerating pairs alone
-    // skipped that batch forever and staging grew unboundedly. A
-    // missing pairs partition is simply an empty pair set.
-    def idsIn(root: String): Set[Long] = {
-      val rp = new org.apache.hadoop.fs.Path(root)
-      if (!fs.exists(rp)) Set.empty
-      else fs.listStatus(rp).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("batch_id="))
-        .map(_.getPath.getName.stripPrefix("batch_id=").toLong).toSet
-    }
-    val batchIds =
-      (idsIn(stSigs(path)) ++ idsIn(stShing(path)) ++
-        idsIn(stPairs(path))).toSeq.sorted
-    // Appended-pair reporting comes from the writes' own commit
-    // artifacts ([[Formats.appendCounted]], VERDICT r9 minor): the
-    // publish loop runs NO action beyond the appends themselves.
-    var appended = 0L
-    batchIds.foreach { b =>
-      // A crash in a previous publish can land between the three
-      // per-batch staging deletes (sigs → shingles → pairs, pairs
-      // LAST — so a listed batch id may have its sigs/shingles
-      // partitions already gone). Each table's append is therefore
-      // individually gated on its partition still existing: absent =
-      // that table's append already completed AND its delete landed.
-      def gone(root: String): Boolean =
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$root/batch_id=$b"))
-      // sigs: append this batch's docs not already sealed.
-      if (!gone(stSigs(path))) {
-        val sg = s.read.parquet(s"${stSigs(path)}/batch_id=$b")
-          .select("doc_id", "bi", "bh").localCheckpoint()
-        val sealedDocs = s.read.parquet(sigs(path))
-          .select("doc_id").distinct()
-        sg.join(sealedDocs, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-          .write.mode("append").parquet(sigs(path))
-      }
-      // shingles: same recovery, by doc_id.
-      if (!gone(stShing(path))) {
-        val sh = s.read.parquet(s"${stShing(path)}/batch_id=$b")
-          .select("doc_id", "shingles").localCheckpoint()
-        val sealedSh = s.read.parquet(shing(path))
-          .select("doc_id").distinct()
-        sh.join(sealedSh, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-          .write.mode("append").parquet(shing(path))
-      }
-      // pairs: by endpoint pair; the pairs table may not exist yet,
-      // and the batch's pairs PARTITION may not either (zero verified
-      // pairs, or a crashed publish already sealed+deleted it) —
-      // either way the pair set to append is empty.
-      if (!gone(stPairs(path))) {
-        val pr = s.read.parquet(s"${stPairs(path)}/batch_id=$b")
-          .select("doc_a", "doc_b", "inter", "uni").localCheckpoint()
-        val pairsP = new org.apache.hadoop.fs.Path(pairs(path))
-        val missPr =
-          if (fs.exists(pairsP))
-            pr.join(s.read.parquet(pairs(path)).select("doc_a", "doc_b"),
-              Seq("doc_a", "doc_b"), "left_anti").localCheckpoint()
-          else pr
-        appended += Formats.appendCounted(missPr, pairs(path))
-      }
-      Seq(stSigs(path), stShing(path), stPairs(path)).foreach(r =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$r/batch_id=$b"), true))
-    }
-    // Clear batch-less staging roots unless a concurrent ingest
-    // landed fresh batches meanwhile.
-    Seq(stSigs(path), stShing(path), stPairs(path)).foreach { r =>
-      val rp = new org.apache.hadoop.fs.Path(r)
-      if (fs.exists(rp) && !fs.listStatus(rp)
-          .exists(_.getPath.getName.startsWith("batch_id=")))
-        fs.delete(rp, true)
-    }
-    appended
-  }
+  def publish(s: SparkSession, path: String): Long =
+    Segments.publish(s, Seq(
+      Segments.Table(stSigs(path), SigCols,
+        Segments.appendMissing(s, sigs(path), Seq("doc_id"))),
+      Segments.Table(stShing(path), ShingCols,
+        Segments.appendMissing(s, shing(path), Seq("doc_id"))),
+      Segments.Table(stPairs(path), PairCols,
+        Segments.appendMissing(s, pairs(path), Seq("doc_a", "doc_b")))
+    )).last
 
   /** ROW-LEVEL FORGET on the signature store (VERDICT r12 item 4's
     * MinHash mirror of [[graft.sim.VersionedIndex.publishDelete]]):
@@ -349,35 +246,28 @@ object DedupIngest {
   private[graft] val HistMod = 7
   private[graft] val Waves = 3
 
+  /** The fixture's documents (doc_id, text), the source of every
+    * doc-streaming store: history is `doc_id % 10 == HistMod`.
+    */
+  private[graft] def docs(s: SparkSession, dir: String): DataFrame =
+    graft.Tables(s, dir, "documents").select("doc_id", "text")
+      .localCheckpoint()
+
+  /** Streamed wave `w`: the non-history docs with `doc_id % Waves == w`. */
+  private[graft] def wave(w: Int): Column =
+    col("doc_id") % 10 =!= HistMod && col("doc_id") % Waves === w
+
   def streamDedup(s0: SparkSession, dir: String): DataFrame = {
-    val path = StoreRoot.path(s0, "dedup_ingest", dir)
-    graft.operators.Lineage.ensure(s0, dir, "dd_stream_store") {
-      // Store build on a child session with wave-sized shuffle
-      // partitions (round 13, the PipeIngest.pipeStreamIngest
-      // rationale): the micro-batch joins/aggregations otherwise fan
-      // 32 ways for a few-hundred-document wave. Partition count never
-      // affects the discovered pair set (spec-pinned invariance).
-      val s = graft.GraftSession.scoped(s0,
-        graft.GraftSession.wavePartitions(s0))
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(root, true) // a crashed previous run's leftovers
-      val docsAll = graft.Tables(s, dir, "documents")
-        .select("doc_id", "text").localCheckpoint()
-      build(s, docsAll.filter(col("doc_id") % 10 === HistMod), path)
-      val src = s"$path/src"
-      val ckpt = s"$path/ckpt"
-      def stream = s.readStream.schema(docsAll.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      def writeWave(w: Int): Unit = docsAll
-        .filter(col("doc_id") % 10 =!= HistMod &&
-          col("doc_id") % Waves === w)
-        .coalesce(1).write.mode("append").parquet(src)
-      writeWave(0); writeWave(1)
-      ingest(s, path, stream, ckpt)
+    val path = Streams.waveStore(s0, dir, "dedup_ingest",
+        "dd_stream_store") { (s, path) =>
+      val all = docs(s, dir)
+      build(s, all.filter(col("doc_id") % 10 === HistMod), path)
+      val waves = new Streams.Waves(s, path, all)
+      waves.add(wave(0)); waves.add(wave(1))
+      waves.run(ingest)
       publish(s, path)
-      writeWave(2)
-      ingest(s, path, stream, ckpt) // staged, deliberately unpublished
+      waves.add(wave(2))
+      waves.run(ingest) // staged, deliberately unpublished
     }
     pairsAll(s0, path).orderBy("doc_a", "doc_b")
   }

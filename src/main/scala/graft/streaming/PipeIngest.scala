@@ -2,13 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.GraftSession
-import graft.core.StoreRoot
 import graft.dedup.Dedup
 import graft.pipeline.CorpusPipeline
-import graft.sources.Formats
 import graft.text.{ByteBpe, QualityClassifier, TokenizerStore}
 
 /** STREAMING CORPUS BUILD — the composed pipeline's front door (the
@@ -38,8 +34,8 @@ import graft.text.{ByteBpe, QualityClassifier, TokenizerStore}
   *    survivors as publishes land).
   *  - `docs/`              — sealed encoded rows (doc_id, batch_id,
   *    n_pretokens, n_pieces, pieces_md5).
-  *  - `staged_{docs,shingles}/batch_id=N/` — the growing segment,
-  *    dynamic-partition-overwritten per micro-batch (replay-safe).
+  *  - `staged_{docs,shingles}/` — the growing segment, one
+  *    [[Segments.stage]] partition per micro-batch (replay-safe).
   *
   * DEDUP CONVENTION: streaming ingest is necessarily GREEDY and
   * order-dependent where the batch build is global — a batch doc d
@@ -52,7 +48,7 @@ import graft.text.{ByteBpe, QualityClassifier, TokenizerStore}
   * compaction-time refinement; the oracle reproduces THIS greedy
   * rule wave-for-wave, unrolled.
   *
-  * Exactly-once discipline (the [[DedupIngest]] proof shape): each
+  * Exactly-once discipline (the [[Segments]] proof shape): each
   * batch reads keep_shingles ∪ staged(< own batch_id), so a replay
   * after later batches landed recomputes its original survivor set;
   * staging is batch_id dynamic overwrite; publish seals by per-table
@@ -86,6 +82,10 @@ object PipeIngest {
   private def spanIdxP(path: String) = s"$path/span_index"
   private def stSpans(path: String) = s"$path/staged_spans"
   private def funnelP(path: String) = s"$path/funnel"
+
+  private val DocCols = Seq("doc_id", "batch_id", "n_pretokens",
+    "n_pieces", "pieces_md5")
+  private val ShingCols = Seq("doc_id", "shingles", "mk")
 
   /** (doc_id, shingles, mk): the min-shingle-keyed frame of a
     * (doc_id, clean) set — the batch pipeline's candidate key over
@@ -163,18 +163,6 @@ object PipeIngest {
       .write.mode("overwrite").parquet(spanIdxP(path))
   }
 
-  private def staged(s: SparkSession, root: String,
-      cols: Seq[String], before: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hasBatch = fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-    if (hasBatch)
-      Some(s.read.parquet(root).filter(col("batch_id") < before)
-        .select(cols.map(col): _*))
-    else None
-  }
-
   /** Encode a (doc_id, clean) frame against the STORED tokenizer —
     * the micro-batch encode block, factored so [[compact]] admits
     * previously-dropped docs through the identical chain. Returns
@@ -210,12 +198,6 @@ object PipeIngest {
         coalesce(col("pm"), md5(lit(""))).as("pieces_md5"))
   }
 
-  /** Run the raw-document stream through the pipeline against the
-    * store. Per micro-batch: extract → score under the STORED model →
-    * greedy near-dup check against store ∪ staged(<batch) ∪ smaller
-    * same-batch ids → encode survivors against the STORED tokenizer →
-    * land (docs, shingles) in the batch's staging partitions.
-    */
   /** The shared front of every micro-batch: extract → stored-NB keep →
     * greedy near-dup survivors (vs store ∪ staged(<batch) ∪ smaller
     * same-batch ids). Returns (keepB, shB, surv).
@@ -228,10 +210,8 @@ object PipeIngest {
         s.read.parquet(priorsP(path)))
       .localCheckpoint()
     val shB = keyedShingles(keepB).localCheckpoint()
-    val prior = staged(s, stShing(path),
-        Seq("doc_id", "shingles", "mk"), batchId)
-      .fold(s.read.parquet(keepShing(path)))(st =>
-        s.read.parquet(keepShing(path)).unionByName(st))
+    val prior = Segments.staged(s, s.read.parquet(keepShing(path)),
+      stShing(path), ShingCols, batchId)
     // Greedy drop rule: d verifies against a prior keep, or a
     // same-batch quality-keep with smaller id.
     val dropPrior = shB.as("a").join(prior.as("b"), verified)
@@ -250,28 +230,24 @@ object PipeIngest {
     */
   private def stageBatch(s: SparkSession, path: String, shB: DataFrame,
       surv: DataFrame, enc: DataFrame, batchId: Long): Unit = {
-    Formats.backfillPartitions(
-      enc.withColumn("batch_id", lit(batchId)),
-      "batch_id", stDocs(path))
-    Formats.backfillPartitions(
-      shB.join(surv.select("doc_id"), "doc_id")
-        .withColumn("batch_id", lit(batchId)),
-      "batch_id", stShing(path))
+    Segments.stage(stDocs(path))(enc, batchId)
+    Segments.stage(stShing(path))(
+      shB.join(surv.select("doc_id"), "doc_id"), batchId)
   }
 
+  /** Run the raw-document stream through the pipeline against the
+    * store. Per micro-batch: extract → score under the STORED model →
+    * greedy near-dup check against store ∪ staged(<batch) ∪ smaller
+    * same-batch ids → encode survivors against the STORED tokenizer →
+    * land (docs, shingles) in the batch's staging partitions.
+    */
   def ingest(s: SparkSession, path: String, batches: DataFrame,
-      checkpoint: String): Unit = {
-    val q = batches.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val (_, shB, surv) = greedyFront(s, path, b, batchId)
-        stageBatch(s, path, shB, surv,
-          encodeRows(s, path, surv, batchId), batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    Streams.drain(batches, checkpoint) { (b, batchId) =>
+      val (_, shB, surv) = greedyFront(s, path, b, batchId)
+      stageBatch(s, path, shB, surv,
+        encodeRows(s, path, surv, batchId), batchId)
+    }
 
   /** The FULL micro-batch chain (round 11 — the batch recipe's stage
     * list, streamed): extract → stored-NB keep → greedy dedup →
@@ -297,8 +273,8 @@ object PipeIngest {
     *    indexed set is always "spans of the corpus text as emitted".
     *
     * Per-batch FUNNEL row (batch_id, n_in, n_quality_kept,
-    * n_dedup_kept, n_decontam_kept, n_tokens_cut) lands in
-    * `funnel/batch_id=N` by dynamic-partition overwrite — derived
+    * n_dedup_kept, n_decontam_kept, n_tokens_cut) lands in the
+    * batch's `funnel/` partition ([[Segments.stage]]) — derived
     * deterministically from the batch content, so replay rewrites it
     * identically (exactly-once without sealing).
     *
@@ -316,149 +292,76 @@ object PipeIngest {
     val evC = s.read.parquet(benchSgP(path)).localCheckpoint()
     val bloomBytes = s.read.parquet(benchBloomP(path))
       .first().getAs[Array[Byte]]("bloom")
-    val q = batches.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val (keepB, shB, surv) = greedyFront(s, path, b, batchId)
-        // stage 4: benchmark decontamination (stored sketch + exact
-        // verify; docs too short to shingle cannot be assessed — keep)
-        val ovl = Dedup.bloomProbe(
-          shB.join(surv.select("doc_id"), "doc_id")
-            .select("doc_id", "shingles"),
-          evC, bloomBytes)
-        val decon = surv.join(ovl, Seq("doc_id"), "left")
-          .filter(col("n_shingles").isNull ||
-            col("n_overlap") * CorpusPipeline.ContamFrac
-              < col("n_shingles"))
-          .select("doc_id", "clean").localCheckpoint()
-        // stage 5: greedy span scrub vs span_index ∪ staged(<batch)
-        val priorSpans = staged(s, stSpans(path), Seq("span"), batchId)
-          .fold(s.read.parquet(spanIdxP(path)).select("span"))(st =>
-            s.read.parquet(spanIdxP(path)).select("span")
-              .unionByName(st))
-        val scrubbed = CorpusPipeline
-          .scrubStageAgainst(decon, priorSpans).localCheckpoint()
-        stageBatch(s, path, shB, surv,
-          encodeRows(s, path, scrubbed, batchId), batchId)
-        Formats.backfillPartitions(
-          CorpusPipeline.spanFrame(scrubbed)
-            .select("doc_id", "span").distinct()
-            .withColumn("batch_id", lit(batchId)),
-          "batch_id", stSpans(path))
-        // funnel row — the per-wave acceptance dashboard
-        val nIn = b.agg(count(lit(1)).as("n_in"))
-        val nQ = keepB.agg(count(lit(1)).as("n_quality_kept"))
-        val nS = surv.agg(count(lit(1)).as("n_dedup_kept"))
-        val nD = decon.agg(count(lit(1)).as("n_decontam_kept"),
-          sum(size(tokens(col("clean"))).cast("long")).as("tin"))
-        val tOut = scrubbed.agg(
-          sum(size(tokens(col("clean"))).cast("long")).as("tout"))
-        Formats.backfillPartitions(
-          nIn.crossJoin(broadcast(nQ)).crossJoin(broadcast(nS))
-            .crossJoin(broadcast(nD)).crossJoin(broadcast(tOut))
-            .select(lit(batchId).as("batch_id"), col("n_in"),
-              col("n_quality_kept"), col("n_dedup_kept"),
-              col("n_decontam_kept"),
-              (coalesce(col("tin"), lit(0L))
-                - coalesce(col("tout"), lit(0L))).as("n_tokens_cut")),
-          "batch_id", funnelP(path))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.drain(batches, checkpoint) { (b, batchId) =>
+      val (keepB, shB, surv) = greedyFront(s, path, b, batchId)
+      // stage 4: benchmark decontamination (stored sketch + exact
+      // verify; docs too short to shingle cannot be assessed — keep)
+      val ovl = Dedup.bloomProbe(
+        shB.join(surv.select("doc_id"), "doc_id")
+          .select("doc_id", "shingles"),
+        evC, bloomBytes)
+      val decon = surv.join(ovl, Seq("doc_id"), "left")
+        .filter(col("n_shingles").isNull ||
+          col("n_overlap") * CorpusPipeline.ContamFrac
+            < col("n_shingles"))
+        .select("doc_id", "clean").localCheckpoint()
+      // stage 5: greedy span scrub vs span_index ∪ staged(<batch)
+      val priorSpans = Segments.staged(s,
+        s.read.parquet(spanIdxP(path)).select("span"),
+        stSpans(path), Seq("span"), batchId)
+      val scrubbed = CorpusPipeline
+        .scrubStageAgainst(decon, priorSpans).localCheckpoint()
+      stageBatch(s, path, shB, surv,
+        encodeRows(s, path, scrubbed, batchId), batchId)
+      Segments.stage(stSpans(path))(CorpusPipeline.spanFrame(scrubbed)
+        .select("doc_id", "span").distinct(), batchId)
+      // funnel row — the per-wave acceptance dashboard
+      val nIn = b.agg(count(lit(1)).as("n_in"))
+      val nQ = keepB.agg(count(lit(1)).as("n_quality_kept"))
+      val nS = surv.agg(count(lit(1)).as("n_dedup_kept"))
+      val nD = decon.agg(count(lit(1)).as("n_decontam_kept"),
+        sum(size(tokens(col("clean"))).cast("long")).as("tin"))
+      val tOut = scrubbed.agg(
+        sum(size(tokens(col("clean"))).cast("long")).as("tout"))
+      Segments.stage(funnelP(path))(
+        nIn.crossJoin(broadcast(nQ)).crossJoin(broadcast(nS))
+          .crossJoin(broadcast(nD)).crossJoin(broadcast(tOut))
+          .select(col("n_in"), col("n_quality_kept"),
+            col("n_dedup_kept"), col("n_decontam_kept"),
+            (coalesce(col("tin"), lit(0L))
+              - coalesce(col("tout"), lit(0L))).as("n_tokens_cut")),
+        batchId)
+    }
   }
 
   /** Sealed ∪ staged encoded rows — visible before any publish. */
   def docsAll(s: SparkSession, path: String): DataFrame = {
-    val cols = Seq("doc_id", "batch_id", "n_pretokens", "n_pieces",
-      "pieces_md5")
     val p = new org.apache.hadoop.fs.Path(docsP(path))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val sealedD =
       if (fs.exists(p))
-        s.read.parquet(docsP(path)).select(cols.map(col): _*)
+        s.read.parquet(docsP(path)).select(DocCols.map(col): _*)
       else s.range(0).select(col("id").as("doc_id"),
         col("id").as("batch_id"), col("id").as("n_pretokens"),
         col("id").as("n_pieces"),
         col("id").cast("string").as("pieces_md5"))
-    staged(s, stDocs(path), cols, Long.MaxValue)
-      .fold(sealedD)(st => sealedD.unionByName(st))
+    Segments.staged(s, sealedD, stDocs(path), DocCols)
   }
 
-  /** Seal staged batches into the durable store (docs append +
-    * survivor shingles into keep_shingles), per-table anti-join
-    * recovery by doc_id, batch ids enumerated across BOTH staging
-    * roots, staging partitions deleted only after the appends land.
+  /** Seal staged batches into the durable store ([[Segments.publish]]):
+    * docs append, survivor shingles into keep_shingles and (FULL-chain
+    * stores only) post-scrub spans into the span index, each by
+    * per-table anti-join on doc_id. Returns the docs appended.
     */
-  def publish(s: SparkSession, path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def idsIn(root: String): Set[Long] = {
-      val rp = new org.apache.hadoop.fs.Path(root)
-      if (!fs.exists(rp)) Set.empty
-      else fs.listStatus(rp).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("batch_id="))
-        .map(_.getPath.getName.stripPrefix("batch_id=").toLong).toSet
-    }
-    val batchIds =
-      (idsIn(stDocs(path)) ++ idsIn(stShing(path)) ++
-        idsIn(stSpans(path))).toSeq.sorted
-    // Appended-doc reporting comes from the writes' own commit
-    // artifacts ([[Formats.appendCounted]], VERDICT r9 minor): the
-    // publish loop runs NO action beyond the appends themselves.
-    var appended = 0L
-    batchIds.foreach { b =>
-      def gone(root: String): Boolean =
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$root/batch_id=$b"))
-      if (!gone(stDocs(path))) {
-        // Reading one batch_id=N leaf directly loses the partition
-        // column — restore it from the id being sealed.
-        val d = s.read.parquet(s"${stDocs(path)}/batch_id=$b")
-          .withColumn("batch_id", lit(b))
-          .select("doc_id", "batch_id", "n_pretokens", "n_pieces",
-            "pieces_md5")
-          .localCheckpoint()
-        val docsRoot = new org.apache.hadoop.fs.Path(docsP(path))
-        val miss =
-          if (fs.exists(docsRoot))
-            d.join(s.read.parquet(docsP(path)).select("doc_id"),
-              Seq("doc_id"), "left_anti").localCheckpoint()
-          else d
-        appended += Formats.appendCounted(miss, docsP(path))
-      }
-      if (!gone(stShing(path))) {
-        val sh = s.read.parquet(s"${stShing(path)}/batch_id=$b")
-          .select("doc_id", "shingles", "mk").localCheckpoint()
-        val sealedSh = s.read.parquet(keepShing(path))
-          .select("doc_id").distinct()
-        sh.join(sealedSh, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-          .write.mode("append").parquet(keepShing(path))
-      }
-      // FULL-chain stores only: seal the batch's post-scrub spans
-      // into the span index (same per-table anti-join recovery).
-      if (!gone(stSpans(path))) {
-        val sp = s.read.parquet(s"${stSpans(path)}/batch_id=$b")
-          .select("doc_id", "span").localCheckpoint()
-        val sealedSp = s.read.parquet(spanIdxP(path))
-          .select("doc_id").distinct()
-        sp.join(sealedSp, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-          .write.mode("append").parquet(spanIdxP(path))
-      }
-      Seq(stDocs(path), stShing(path), stSpans(path)).foreach(r =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$r/batch_id=$b"),
-          true))
-    }
-    Seq(stDocs(path), stShing(path), stSpans(path)).foreach { r =>
-      val rp = new org.apache.hadoop.fs.Path(r)
-      if (fs.exists(rp) && !fs.listStatus(rp)
-          .exists(_.getPath.getName.startsWith("batch_id=")))
-        fs.delete(rp, true)
-    }
-    appended
-  }
+  def publish(s: SparkSession, path: String): Long =
+    Segments.publish(s, Seq(
+      Segments.Table(stDocs(path), DocCols,
+        Segments.appendMissing(s, docsP(path), Seq("doc_id"))),
+      Segments.Table(stShing(path), ShingCols,
+        Segments.appendMissing(s, keepShing(path), Seq("doc_id"))),
+      Segments.Table(stSpans(path), Seq("doc_id", "span"),
+        Segments.appendMissing(s, spanIdxP(path), Seq("doc_id")))
+    )).head
 
   // -----------------------------------------------------------------
   // GREEDY → GLOBAL RECONCILIATION (VERDICT r9 item 2): the sealed
@@ -560,21 +463,15 @@ object PipeIngest {
     // ADMIT first (idempotent appends): encode rows + keep shingles,
     // each anti-joined against the live table — a rerun after a crash
     // appends only what is missing.
-    var admitted = 0L
-    if (!admit.isEmpty) {
-      val docsRoot = new org.apache.hadoop.fs.Path(docsP(path))
-      val enc = encodeRows(s, path, admit, -1L).localCheckpoint()
-      val missDocs =
-        if (fs.exists(docsRoot))
-          enc.join(s.read.parquet(docsP(path)).select("doc_id"),
-            Seq("doc_id"), "left_anti").localCheckpoint()
-        else enc
-      admitted += Formats.appendCounted(missDocs, docsP(path))
-      val missSh = keyedShingles(admit)
-        .join(s.read.parquet(keepShing(path)).select("doc_id"),
-          Seq("doc_id"), "left_anti").localCheckpoint()
-      missSh.write.mode("append").parquet(keepShing(path))
-    }
+    val admitted =
+      if (admit.isEmpty) 0L
+      else {
+        val n = Segments.appendMissing(s, docsP(path), Seq("doc_id"))(
+          encodeRows(s, path, admit, -1L).localCheckpoint())
+        Segments.appendMissing(s, keepShing(path), Seq("doc_id"))(
+          keyedShingles(admit))
+        n
+      }
 
     // DEMOTE via staged rewrite + marker + swap (skipped when empty).
     if (!demote.isEmpty) {
@@ -594,8 +491,8 @@ object PipeIngest {
   // -----------------------------------------------------------------
   // pipe_stream_ingest: the oracle-gated lifecycle — history =
   // doc_id % 10 == HistMod (the dd_stream_dedup convention), the rest
-  // streams in three waves by doc_id % 3 (one file per wave,
-  // maxFilesPerTrigger=1). Waves 0–1 are ingested and PUBLISHED,
+  // streams in three waves by doc_id % 3 ([[Streams.Waves]]: one file,
+  // so one micro-batch, per wave). Waves 0–1 are ingested and PUBLISHED,
   // wave 2 stays staged; the gated result reads sealed ∪ staged, so
   // the hash covers both segment states, the cross-batch greedy
   // dedup, the stored-model scoring and the stored-tokenizer encode.
@@ -603,50 +500,28 @@ object PipeIngest {
   private[graft] val Waves = DedupIngest.Waves
 
   def pipeStreamIngest(s0: SparkSession, dir: String): DataFrame = {
-    val path = StoreRoot.path(s0, "pipe_ingest", dir)
-    graft.operators.Lineage.ensure(s0, dir, "pipe_stream_store") {
-      // Store build on a child session sized to the WAVE volume: the
-      // micro-batch waves and artifact training ran on the caller's 32
-      // shuffle partitions, so every tiny per-wave stage paid 32 task
-      // launches and the state/sink writers fanned 32 ways for a
-      // few-hundred-document batch. A micro-batch's shuffle should be
-      // a handful of real-sized partitions (the Resume/RateIngest
-      // discipline), not the core count; a production deployment
-      // picks this from its batch size the same way. Results are
-      // partition-count invariant (spec-pinned).
-      val s = GraftSession.scoped(s0, GraftSession.wavePartitions(s0))
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(root, true)
-      val docsAllT = graft.Tables(s, dir, "documents")
-        .select("doc_id", "text").localCheckpoint()
-      build(s, docsAllT.filter(col("doc_id") % 10 === HistMod), path)
-      val src = s"$path/src"
-      val ckptDir = s"$path/ckpt"
-      def stream = s.readStream.schema(docsAllT.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      def writeWave(w: Int): Unit = docsAllT
-        .filter(col("doc_id") % 10 =!= HistMod &&
-          col("doc_id") % Waves === w)
-        .coalesce(1).write.mode("append").parquet(src)
+    val path = Streams.waveStore(s0, dir, "pipe_ingest",
+        "pipe_stream_store") { (s, path) =>
+      val all = DedupIngest.docs(s, dir)
+      build(s, all.filter(col("doc_id") % 10 === HistMod), path)
+      val waves = new Streams.Waves(s, path, all)
       // One ingest PER wave (ADVICE r9): with both files written up
       // front, FileStreamSource orders them by modification time and
       // a timestamp tie falls back to part-file names — swapping
       // batches 0/1, and with them the batch_id column and the greedy
       // earlier-batch-survivor keeps. Running ingest after each
-      // writeWave pins wave w to batch w (the checkpoint continues
+      // wave's write pins wave w to batch w (the checkpoint continues
       // batch numbering across runs), making the mapping a contract
       // instead of a filesystem race. (DedupIngest keeps the
       // two-files-one-run shape: its PAIR set is provably invariant
       // under a batch swap — either order discovers each cross-wave
       // pair exactly once — so only this lifecycle, whose RESULT
       // carries batch_id, needs the pinning.)
-      writeWave(0); ingest(s, path, stream, ckptDir)
-      writeWave(1); ingest(s, path, stream, ckptDir)
+      waves.add(DedupIngest.wave(0)); waves.run(ingest)
+      waves.add(DedupIngest.wave(1)); waves.run(ingest)
       publish(s, path)
-      writeWave(2)
-      ingest(s, path, stream, ckptDir) // staged, deliberately unpublished
-      ()
+      waves.add(DedupIngest.wave(2))
+      waves.run(ingest) // staged, deliberately unpublished
     }
     docsAll(s0, path).orderBy("doc_id")
   }
@@ -659,42 +534,28 @@ object PipeIngest {
   // batch_id = −1 through the stored-tokenizer encode, everything
   // else bit-identical to its sealed row.
   def pipeCompact(s0: SparkSession, dir: String): DataFrame = {
-    val path = StoreRoot.path(s0, "pipe_compact", dir)
-    graft.operators.Lineage.ensure(s0, dir, "pipe_compact_store") {
-      // Wave-sized child session, as in pipeStreamIngest.
-      val s = GraftSession.scoped(s0, GraftSession.wavePartitions(s0))
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(root, true)
-      val docsAllT = graft.Tables(s, dir, "documents")
-        .select("doc_id", "text").localCheckpoint()
+    val path = Streams.waveStore(s0, dir, "pipe_compact",
+        "pipe_compact_store") { (s, path) =>
+      val all = DedupIngest.docs(s, dir)
       graft.operators.PhaseLog.phase("pipe_compact artifact build") {
-        build(s, docsAllT.filter(col("doc_id") % 10 === HistMod), path)
+        build(s, all.filter(col("doc_id") % 10 === HistMod), path)
       }
-      val src = s"$path/src"
-      val ckptDir = s"$path/ckpt"
-      def stream = s.readStream.schema(docsAllT.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      def writeWave(w: Int): Unit = docsAllT
-        .filter(col("doc_id") % 10 =!= HistMod &&
-          col("doc_id") % Waves === w)
-        .coalesce(1).write.mode("append").parquet(src)
+      val waves = new Streams.Waves(s, path, all)
       // Per-wave walls (VERDICT r12 item 6): the cold floor of this
       // row is adjudicated from these phase lines — each wave is a
       // full streaming-query start/ingest/stop plus the greedy
       // front's store-sized reads.
       (0 until Waves).foreach { w =>
         graft.operators.PhaseLog.phase(s"pipe_compact wave $w") {
-          writeWave(w); ingest(s, path, stream, ckptDir)
+          waves.add(DedupIngest.wave(w)); waves.run(ingest)
         }
       }
       graft.operators.PhaseLog.phase("pipe_compact publish") {
         publish(s, path)
       }
       graft.operators.PhaseLog.phase("pipe_compact compact") {
-        compact(s, path, docsAllT)
+        compact(s, path, all)
       }
-      ()
     }
     docsAll(s0, path).orderBy("doc_id")
   }
@@ -711,39 +572,24 @@ object PipeIngest {
   // wave's per-stage acceptance counts.
   private[graft] val EvalMod = CorpusPipeline.PipeEvalMod
 
-  private def fullStore(s0: SparkSession, dir: String): String = {
-    val path = StoreRoot.path(s0, "pipe_full", dir)
-    graft.operators.Lineage.ensure(s0, dir, "pipe_stream_full_store") {
-      // Wave-sized child session, as in pipeStreamIngest.
-      val s = GraftSession.scoped(s0, GraftSession.wavePartitions(s0))
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(root, true)
-      val docsAllT = graft.Tables(s, dir, "documents")
-        .select("doc_id", "text").localCheckpoint()
+  private def fullStore(s0: SparkSession, dir: String): String =
+    Streams.waveStore(s0, dir, "pipe_full",
+        "pipe_stream_full_store") { (s, path) =>
+      val all = DedupIngest.docs(s, dir)
       buildFull(s,
-        docsAllT.filter(col("doc_id") % 10 === HistMod),
-        docsAllT.filter(col("doc_id") % 10 === EvalMod), path)
-      val src = s"$path/src"
-      val ckptDir = s"$path/ckpt"
-      def stream = s.readStream.schema(docsAllT.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      def writeWave(w: Int): Unit = docsAllT
-        .filter(col("doc_id") % 10 =!= HistMod &&
-          col("doc_id") % 10 =!= EvalMod &&
-          col("doc_id") % Waves === w)
-        .coalesce(1).write.mode("append").parquet(src)
+        all.filter(col("doc_id") % 10 === HistMod),
+        all.filter(col("doc_id") % 10 === EvalMod), path)
+      val waves = new Streams.Waves(s, path, all)
+      def wave(w: Int) =
+        DedupIngest.wave(w) && col("doc_id") % 10 =!= EvalMod
       // One ingest per wave — the batch_id pinning contract (see
-      // pipeStreamIngest's Scaladoc).
-      writeWave(0); ingestFull(s, path, stream, ckptDir)
-      writeWave(1); ingestFull(s, path, stream, ckptDir)
+      // pipeStreamIngest).
+      waves.add(wave(0)); waves.run(ingestFull)
+      waves.add(wave(1)); waves.run(ingestFull)
       publish(s, path)
-      writeWave(2)
-      ingestFull(s, path, stream, ckptDir) // staged, deliberately unpublished
-      ()
+      waves.add(wave(2))
+      waves.run(ingestFull) // staged, deliberately unpublished
     }
-    path
-  }
 
   def pipeStreamFull(s: SparkSession, dir: String): DataFrame =
     docsAll(s, fullStore(s, dir)).orderBy("doc_id")

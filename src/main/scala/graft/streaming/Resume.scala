@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.Tables
 import graft.core.StoreRoot
@@ -23,7 +22,7 @@ import graft.core.StoreRoot
   *     scheduled `Trigger.AvailableNow` runs.
   *  2. RUN 1: file source over the directory holding only wave 1 →
   *     watermarked 1-hour tumbling aggregate → idempotent foreachBatch
-  *     parquet sink ([[Sinks.idempotentBatchSink]]) → AvailableNow →
+  *     parquet sink ([[Segments.stage]]) → AvailableNow →
   *     terminates. Windows sealed by wave 1's watermark are emitted;
   *     the window state still open at the wave boundary and the
   *     source offsets live ONLY in the checkpoint.
@@ -157,13 +156,7 @@ object Resume {
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
             .as("window_start"),
           col("event_type"), col("n"), col("sum_cents"))
-      val q = agg.writeStream
-        .foreachBatch(Sinks.idempotentBatchSink(out.toString))
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Streams.drain(agg, ckpt.toString)(Segments.stage(out.toString))
     }
 
     // A streaming query's state-partition count is fixed at first

@@ -4,7 +4,7 @@ import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.{GraftSession, Tables}
 import graft.core.StoreRoot
@@ -113,16 +113,9 @@ object Stateful {
   private def runToCompletion(s: SparkSession, out: DataFrame): DataFrame = {
     val qn = "st_run_" + UUID.randomUUID().toString.replace("-", "")
     val ckpt = java.nio.file.Paths.get(StoreRoot.path(s, "ckpt", qn))
-    try {
-      val q = out.writeStream
-        .format("memory")
-        .queryName(qn)
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally StoreRoot.rmTree(ckpt) // even when the query fails mid-stream
+    try Streams.availableNow(out, ckpt.toString)(
+      _.format("memory").queryName(qn))
+    finally StoreRoot.rmTree(ckpt) // even when the query fails mid-stream
     val result = s.table(qn) // eager analysis: plan no longer needs the view
     s.catalog.dropTempView(qn)
     result
@@ -268,17 +261,20 @@ object Stateful {
     }
   }
 
+  /** [[GraftSession.statePartitions]] with state in RocksDB. */
+  private[streaming] def rocksDbState(s: SparkSession): Map[String, String] =
+    GraftSession.statePartitions(s) ++ Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider"))
+
   def twsUserSpend(s: SparkSession, dir: String): DataFrame =
     // TWS requires RocksDB (multi-column-family state). The child
     // session's conf is ISOLATED, so the provider override can never
     // leak to the sibling stateful queries regardless of the Map
     // iteration order Verify/Bench call them in (the set/run/restore
     // dance the pre-child version needed is gone with it).
-    twsUserSpendInner(GraftSession.scoped(s,
-      GraftSession.statePartitions(s) ++ Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider"))), dir)
+    twsUserSpendInner(GraftSession.scoped(s, rocksDbState(s)), dir)
 
   private def twsUserSpendInner(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

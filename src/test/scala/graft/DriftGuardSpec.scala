@@ -108,6 +108,29 @@ class DriftGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"store paths built outside StoreRoot: $offenders")
   }
 
+  /** `file:line` of each `src/main` line outside `owner` naming `word`. */
+  private def named(word: String, owner: String): Seq[String] =
+    mainSources(owner).flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains(word) => s"$p:${i + 1}"
+      }
+    }
+
+  test("only the stream runner starts a streaming query in src/main") {
+    // Streams.availableNow owns the trigger, the checkpoint and the
+    // wait; a `writeStream` elsewhere is a private copy of it.
+    val offenders = named("writeStream", "Streams.scala")
+    assert(offenders.isEmpty, s"writeStream outside Streams: $offenders")
+  }
+
+  test("only Segments names a staged batch partition in src/main") {
+    // Listing, reading or deleting `batch_id=` partitions is the
+    // growing-segment protocol, and its replay and crash-window rules
+    // live in Segments once.
+    val offenders = named("batch_id=", "Segments.scala")
+    assert(offenders.isEmpty, s"batch_id= outside Segments: $offenders")
+  }
+
   test("README test/suite counts match the test tree") {
     val files = Files.walk(Paths.get("src/test/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq

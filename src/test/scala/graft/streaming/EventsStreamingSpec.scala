@@ -446,7 +446,7 @@ class EventsStreamingSpec extends SparkSpec with TempDirs {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val out = tempDir("graft_feb_idem").toString + "/t"
-    val sink = Sinks.idempotentBatchSink(out)
+    val sink = Segments.stage(out)
     val ms = MemoryStream[(Long, Double)]
     val q = ms.toDF().toDF("id", "v").writeStream
       .foreachBatch(sink)

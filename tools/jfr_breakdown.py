@@ -1,16 +1,19 @@
 """Where a JVM's CPU samples went: per thread and per library family.
 
-Reads the JSON that `jfr print --json --events jdk.ExecutionSample
-<file>.jfr` writes (stdin or a file) and counts the execution samples
-in a time window, per thread and per family. A sample's family is the
-first frame, walking from the leaf toward the root, whose class matches
-one of FAMILIES; a sample with no such frame is `other`. Threads are
-grouped by name with digit runs folded to `N`, so Spark's per-task
-executor names count as one row.
+Reads the JSON that `jfr print --json --stack-depth 80 --events
+jdk.ExecutionSample <file>.jfr` writes (stdin or a file) and counts the
+execution samples in a time window, per thread and per family. A
+sample's family is the first frame, walking from the leaf toward the
+root, whose class matches one of FAMILIES; a sample with no such frame
+is `other`. Threads are grouped by name with digit runs folded to `N`,
+so Spark's per-task executor names count as one row.
 
 Usage:
-  jfr print --json --events jdk.ExecutionSample run.jfr > run.json
+  jfr print --json --stack-depth 80 --events jdk.ExecutionSample run.jfr > run.json
   python3 tools/jfr_breakdown.py run.json [--start EPOCH_S] [--end EPOCH_S] [--json]
+
+`jfr print` keeps 5 frames per stack by default, which stops short of
+Spark's own frames; 80 reaches them.
 
 `--start`/`--end` bound the window in epoch seconds (a profiled program can print
 `System.currentTimeMillis() / 1e3` around the query it profiles).
