@@ -31,6 +31,21 @@ import org.apache.spark.sql.SparkSession
   * pre-loop `repartition(key)` of a reused edge frame — so the
   * per-round joins co-partition with the loop and the pinned exchange
   * is actually reused.
+  *
+  * Two loop shapes run in a scope:
+  *
+  *  - FIXED-ROUND loops (q52 PageRank's 6 rounds, q60 BFS's 4) build
+  *    all their rounds as ONE plan, each round reading the previous
+  *    round's frame once, and checkpoint only the final frame: the
+  *    loop is one Spark job, not a job, a checkpoint and a re-plan
+  *    per round. The plan grows linearly with the round count, which
+  *    is known and small, so its size estimates stay bounded.
+  *  - CONVERGENCE loops (CC min-label, ancestor doubling) run until
+  *    the data stops changing, and the BPE and unigram trainers run a
+  *    round per merge or segmentation step: they checkpoint every
+  *    round behind `ColumnBridge.statsBarrier`, which keeps the
+  *    estimates the checkpoints carry from compounding into an
+  *    optimizer stall over a round count the plan cannot bound.
   */
 object Fixpoint {
 
@@ -44,7 +59,7 @@ object Fixpoint {
     * per-shuffle stage materialization + re-optimization is pure added
     * latency — measured 12.4 → 10.9 s on the 20-round BPE merge loop
     * cold at sf0.1 (~0.08 s/round), with zero plan benefit forgone
-    * (loop bodies broadcast by explicit hint, and coalesce/skew
+    * (loop bodies pick their joins by explicit hint, and coalesce/skew
     * handling is moot at 8 partitions).
     */
   def scoped[T](s: SparkSession, nRows: Long)(body: SparkSession => T): T = {

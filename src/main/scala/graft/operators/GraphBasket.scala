@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge.onSession
 
@@ -157,58 +157,48 @@ object GraphBasket {
   // ten below 2^53. (Quantization error vs real PageRank is ≤
   // deg·2^-40 per vertex per round — far below any ranking decision.)
   //
-  // Scale shape: degree is joined into the edge list ONCE, so each of
-  // the [[PrIters]] rounds is one shuffle (join ranks on src) + one
-  // partial-aggregated shuffle (sum by dst); localCheckpoint flattens
-  // lineage so round k's plan does not re-derive rounds 1..k-1. On a
-  // cluster the edge list would be pre-partitioned by `u` and every
-  // round would reuse that exchange.
+  // Scale shape: degree is joined into the edge list ONCE, and the
+  // [[PrIters]] rounds are ONE plan, checkpointed once: each round is
+  // one shuffle-hash join of the rank frame on the `u`-partitioned edge
+  // checkpoint (the rank frame leaves the previous round hash-
+  // partitioned on its vertex, so the join itself moves nothing) and
+  // one partial-aggregated shuffle (sum by dst). The vertex count is a
+  // driver literal: a broadcast one-row frame would be re-broadcast by
+  // every round, since each round's copy of its checkpoint scan gets
+  // fresh attribute ids and so never matches for exchange reuse. Each
+  // round reads the previous one once, so the plan grows linearly and,
+  // with a fixed round count, its size estimates cannot compound into
+  // the optimizer stall `statsBarrier` guards (see Fixpoint).
   def q52PageRank(s: SparkSession, dir: String): DataFrame = {
-    val e0 = pairs(s, dir, MinEdgeSupport).select("pa", "pb")
-    // Checkpoint BEFORE sizing the shuffle scope (ADVICE r6): counting
-    // the raw frame added one extra full derivation of the
-    // co-purchase pair graph purely to size the scope; counting the
-    // checkpointed rows is a metadata pass over materialized data.
-    val ed = e0.select(col("pa").as("u"), col("pb").as("w"))
-      .unionByName(e0.select(col("pb").as("u"), col("pa").as("w")))
-      .localCheckpoint()
-    // Whole build scoped to the edge count (see operators.Fixpoint):
-    // the pre-loop repartition(u) then pins the SAME partition count
-    // the per-round joins require, so the edge exchange stays reused.
-    val ranks = Fixpoint.scoped(s, ed.count()) { cs =>
-    val edc = onSession(cs, ed)
-    // deg and edges are checkpointed so the per-round eager actions
-    // below never re-derive the co-purchase graph from raw data
-    val deg = edc.groupBy("u").agg(count(lit(1)).as("d")).localCheckpoint()
+    val p = pairs(s, dir, MinEdgeSupport)
+    // Sized from the shared edge frame, whose cache knows its rows.
+    val ranks = Fixpoint.scoped(s, 2 * Lineage.rows(p)) { cs =>
+    val ed = undirected(onSession(cs, p))
+    val deg = ed.groupBy("u").agg(count(lit(1)).as("d")).localCheckpoint()
     // hash-partition the edge list on the per-round join key ONCE;
-    // localCheckpoint preserves the partitioning, so every round's
-    // join exchanges only the (small) rank frame, not the edges
-    val edges = edc.join(deg, "u")
-      .repartition(col("u")).localCheckpoint()
-    val n = broadcast(deg.agg(count(lit(1)).as("nv")))
-    var r = deg.crossJoin(n)
-      .select(col("u").as("v"), expr(s"${PrScale}L div nv").as("r"))
-      .localCheckpoint()
-    for (_ <- 1 to PrIters) {
-      // statsBarrier: each round joins the checkpoint of the previous
-      // round, so preserved stats compound exponentially with the
-      // iteration count (see ColumnBridge.statsBarrier).
-      r = org.apache.spark.sql.graft.ColumnBridge.statsBarrier(
-        edges.join(r, edges("u") === r("v"))
-          .select(col("w"), expr("r div d").as("c"))
-          .groupBy("w").agg(sum("c").as("m"))
-          .crossJoin(n)
-          .select(col("w").as("v"),
-            expr(s"((15 * ${PrScale}L) div (100 * nv)) + ((85 * m) div 100)")
-              .as("r"))
-          .localCheckpoint())
-    }
-    onSession(s, r)
+    // localCheckpoint preserves the partitioning, so no round
+    // exchanges the edges
+    val edges = ed.join(deg, "u").repartition(col("u")).localCheckpoint()
+    // at least 1: with no vertices there is no rank to divide
+    val nv = deg.count().max(1L)
+    var r = deg.select(col("u").as("v"), lit(PrScale / nv).as("r"))
+    for (_ <- 1 to PrIters)
+      r = edges.join(r.hint("shuffle_hash"), col("u") === col("v"))
+        .select(col("w"), expr("r div d").as("c"))
+        .groupBy("w").agg(sum("c").as("m"))
+        .select(col("w").as("v"),
+          (lit(15 * PrScale / (100 * nv)) + expr("(85 * m) div 100")).as("r"))
+    onSession(s, r.localCheckpoint())
     }
     ranks.select(col("v").as("part"), col("r").as("rank_scaled"),
         (col("r").cast("double") / lit(PrScale).cast("double")).as("pr"))
       .orderBy(desc("rank_scaled"), asc("part"))
   }
+
+  /** Both directions of every co-purchase pair, as (u, w). */
+  private def undirected(p: DataFrame): DataFrame =
+    p.select(col("pa").as("u"), col("pb").as("w"))
+      .unionByName(p.select(col("pb").as("u"), col("pa").as("w")))
 
   /** Rank quantum: 1e-12 of total mass. */
   val PrScale = 1000000000000L
@@ -229,41 +219,48 @@ object GraphBasket {
   // results in any execution order; vertices still unreached after
   // [[BfsRounds]] rounds are absent in both engines.
   //
-  // Scale shape: each round is one shuffle join of the edge list
-  // against the CURRENT distance frame plus a min-recombine; the
-  // distance frame is vertex-sized, not edge-sized. localCheckpoint
-  // flattens per-round lineage exactly as in q52PageRank. (True
-  // frontier-only expansion — joining just the rows whose d changed —
-  // is an optimization that does not change the fixed-round result.)
+  // Scale shape: the [[BfsRounds]] relaxations are ONE plan,
+  // checkpointed once, as in q52PageRank: each round is one shuffle-
+  // hash join of the vertex-sized distance frame on the `u`-partitioned
+  // edge checkpoint plus one partial-aggregated min-recombine shuffle,
+  // and nothing broadcasts. The source, a global `min(u)`, is observed
+  // by the edge checkpoint's own job, so it costs no stage, and round 1
+  // needs no join. (True frontier-only expansion — joining just the
+  // rows whose d changed — is an optimization that does not change the
+  // fixed-round result.)
   def q60Bfs(s: SparkSession, dir: String): DataFrame = {
-    val e0 = pairs(s, dir, MinEdgeSupport).select("pa", "pb")
-    // Checkpoint before counting — same scope-sizing rule as
-    // q52PageRank (ADVICE r6).
-    val ed = e0.select(col("pa").as("u"), col("pb").as("w"))
-      .unionByName(e0.select(col("pb").as("u"), col("pa").as("w")))
-      .localCheckpoint()
-    // Scoped like q52PageRank — see operators.Fixpoint.
-    val dists = Fixpoint.scoped(s, ed.count()) { cs =>
-    val edges = onSession(cs, ed)
-      .repartition(col("u")).localCheckpoint() // see q52PageRank
-    val src = broadcast(edges.agg(min("u").as("sv")))
-    var dist = edges.crossJoin(src)
-      .filter(col("u") === col("sv"))
-      .select(col("u").as("v"), lit(0L).as("d"))
-      .distinct()
-      .localCheckpoint()
-    for (_ <- 1 to BfsRounds) {
-      // statsBarrier: same compounding guard as q52PageRank's loop.
-      dist = org.apache.spark.sql.graft.ColumnBridge.statsBarrier(dist
-        .unionByName(edges.join(dist, edges("u") === dist("v"))
-          .select(col("w").as("v"), (col("d") + 1L).as("d")))
-        .groupBy("v").agg(min("d").as("d"))
+    val p = pairs(s, dir, MinEdgeSupport)
+    // Sized from the shared edge frame, as in q52PageRank.
+    val dists = Fixpoint.scoped(s, 2 * Lineage.rows(p)) { cs =>
+      onSession(s, bfs(undirected(onSession(cs, p)).repartition(col("u")))
         .localCheckpoint())
-    }
-    onSession(s, dist)
     }
     dists.select(col("v").as("part"), col("d").as("dist"))
       .orderBy("dist", "part")
+  }
+
+  /** Hop distances (v, d) from the minimum `u` of the symmetric edge
+    * list `edges` (u, w), after [[BfsRounds]] relaxations. The edges
+    * are checkpointed once, and that job also yields the source: the
+    * global `min(u)`, observed as the rows pass. Round 1 is then the
+    * source's own edges; each later round sends every reached vertex
+    * its own distance and each neighbour that distance + 1, then keeps
+    * the minimum per vertex. Every reached vertex is an edge endpoint,
+    * so the inner join keeps it. With no edges the source is `null`,
+    * which matches no edge, so the result is empty.
+    */
+  private[operators] def bfs(edges: DataFrame): DataFrame = {
+    val source = Observation()
+    val e = edges.observe(source, min("u").as("v")).localCheckpoint()
+    def relax(from: DataFrame, d: Column) =
+      from.select(explode(array(struct(col("u").as("v"), d.as("d")),
+          struct(col("w").as("v"), (d + 1L).as("d")))).as("x"))
+        .groupBy(col("x.v").as("v")).agg(min("x.d").as("d"))
+    var dist = relax(e.filter(col("u") === lit(source.get("v"))), lit(0L))
+    for (_ <- 2 to BfsRounds)
+      dist = relax(e.join(dist.hint("shuffle_hash"), col("u") === col("v")),
+        col("d"))
+    dist
   }
 
   /** Hop bound for the BFS — mirrored by the unrolled oracle. */

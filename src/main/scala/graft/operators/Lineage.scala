@@ -3,6 +3,7 @@ package graft.operators
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
 /** MATERIALIZED SHARED LINEAGE, engine-wide (VERDICT r5 item 2).
@@ -170,6 +171,16 @@ object Lineage {
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK)(
       build: => DataFrame): DataFrame =
     if (off) build else memo((s, dir, key))(build.persist(level))
+
+  /** Rows of a frame from [[materialized]]: once its cache is built,
+    * the row count the cache kept while building, read with no job;
+    * before that, and with the cache off, a `count()`.
+    */
+  def rows(df: DataFrame): Long = df.queryExecution.withCachedData match {
+    case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+      r.cacheBuilder.rowCountStats.value
+    case _ => df.count()
+  }
 
   /** The value built by `build`, shared by every later caller with the
     * same (session, dir, key) — the [[materialized]] twin for builds

@@ -144,8 +144,7 @@ object Resume {
 
     val waveSchema = s.read.parquet(src.toString).schema
 
-    val sc = graft.GraftSession.scoped(s,
-      graft.GraftSession.statePartitions(s))
+    val sc = graft.GraftSession.scoped(s, Stateful.rocksDbState(s))
     def runOnce(): Unit = {
       val agg = sc.readStream.schema(waveSchema).parquet(src.toString)
         .withColumn("ts_wm", timestamp_micros(expr("ts_ns DIV 1000")))
@@ -166,7 +165,9 @@ object Resume {
     // fixed cost (the aggregate has a few thousand groups). The
     // lifecycle runs on a CHILD session pinned to 4 partitions
     // (VERDICT r6 item 6 — isolated conf, nothing to restore, no
-    // race with concurrent queries on the caller's session).
+    // race with concurrent queries on the caller's session). State is
+    // in RocksDB: on resume the HDFS-backed store logged a WARN for
+    // every snapshot version it found missing.
     runOnce() // wave 1: early windows sealed + emitted, boundary
               // window and source offsets checkpointed
     copyWave(fixtures, src, "wave2")
